@@ -13,9 +13,10 @@ BASELINE input_hint shape plus CDC bookkeeping):
 Two generators, both seedless-deterministic (no wall clock, no RNG
 state shared with anything):
 
-- ``fixture_events``: the 13 grate testdata fixtures as blobs, with a
-  scripted insert -> update -> delete history. Drives the sha256 golden
-  parity gate.
+- ``fixture_events``: a fixture file set (grate's testdata or the
+  tests' stand-in) as blobs, with a scripted insert -> update -> delete
+  history. Drives the exactly-once tests and the sha256 golden parity
+  gate.
 - ``synthetic_doc_events``: scales with the documents table — one CSV
   blob per (source, version-slice) built entirely with DataFrame ops,
   then an I/U/D script derived from hash(path). Drives the oracle checks
@@ -29,8 +30,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-REF_TESTDATA = "/root/reference/testdata"
 
 EVENT_COLS = ("offset", "partition", "op", "repo", "path", "commit",
               "lang", "content")
@@ -49,23 +48,24 @@ def _with_offsets(df: DataFrame, n_partitions: int,
             .select(*EVENT_COLS))
 
 
-def fixture_events(spark: SparkSession, n_partitions: int = 4,
-                   testdata_dir: str = REF_TESTDATA) -> DataFrame:
-    """Scripted history over the grate fixtures:
+def fixture_events(spark: SparkSession, blobs: dict[str, bytes],
+                   n_partitions: int = 4) -> DataFrame:
+    """Scripted history over a fixture set, ``blobs`` mapping a file
+    name to its raw bytes (grate's testdata, or any set that holds
+    ``basic.tsv``, ``basic2.tsv`` and ``testing.xls``):
 
-    phase 1: INSERT every fixture
+    phase 1: INSERT every tabular fixture
     phase 2: UPDATE every .xls/.xlsx fixture (same bytes, new commit) and
              UPDATE basic.tsv with basic2.tsv's content
     phase 3: DELETE testing.xls; INSERT a non-tabular README.md (must be
              filtered out) and a corrupt .xlsx (must become an error row)
     """
     rows = []
-    names = sorted(fn for fn in os.listdir(testdata_dir)
+    names = sorted(fn for fn in blobs
                    if fn.endswith((".xls", ".xlsx", ".csv", ".tsv")))
 
     def blob(fn: str) -> str:
-        with open(os.path.join(testdata_dir, fn), "rb") as f:
-            raw = f.read()
+        raw = blobs[fn]
         if fn.endswith((".xls", ".xlsx")):
             return base64.b64encode(raw).decode("ascii")
         return raw.decode("utf-8")

@@ -972,10 +972,11 @@ def _bucket_expr(key_cols: tuple[str, ...], n_buckets: int):
 # -- driver-side xxhash64 (bit-parity port of Spark's XXH64) ----------------
 # Spark's XxHash64 expression chains columns: the running hash seeds the
 # next column's hash, starting from seed 42. Strings hash their UTF-8
-# bytes, longs the reference hashLong. Gate-tested against the JVM
-# expression over a randomized corpus (tests/test_cdc.py); read_key uses
-# it to route a point lookup WITHOUT a 1-row Spark job, falling back to
-# the JVM expression for any type this port does not cover.
+# bytes, longs the reference hashLong, int/smallint/tinyint hashInt.
+# Gate-tested against the JVM expression over a randomized corpus
+# (tests/test_cdc.py); read_key uses it to route a point lookup WITHOUT
+# a 1-row Spark job, falling back to the JVM expression for any type
+# this port does not cover.
 
 _XXH_P1 = 0x9E3779B185EBCA87
 _XXH_P2 = 0xC2B2AE3D27D4EB4F
@@ -1051,6 +1052,13 @@ def _xxh64_long(value: int, seed: int) -> int:
     return _xxh_fmix(h)
 
 
+def _xxh64_int(value: int, seed: int) -> int:
+    h = (seed + _XXH_P5 + 4) & _M64
+    h ^= ((value & 0xFFFFFFFF) * _XXH_P1) & _M64
+    h = (_rotl64(h, 23) * _XXH_P2 + _XXH_P3) & _M64
+    return _xxh_fmix(h)
+
+
 def py_xxhash64(values: list, types: list, seed: int = 42) -> int | None:
     """Spark XxHash64(cols) replayed in Python: the running hash seeds
     each successive column. ``types`` are Spark simpleString names;
@@ -1063,9 +1071,11 @@ def py_xxhash64(values: list, types: list, seed: int = 42) -> int | None:
             return None
         if tp == "string":
             h = _xxh64_bytes(str(v).encode("utf-8"), h)
-        elif tp in ("bigint", "int", "smallint", "tinyint"):
-            # Spark hashes every integral type as its long value
+        elif tp == "bigint":
             h = _xxh64_long(int(v), h)
+        elif tp in ("int", "smallint", "tinyint"):
+            # Spark hashes the narrower integral types as a 4-byte int
+            h = _xxh64_int(int(v), h)
         else:
             return None
     return h - (1 << 64) if h >= (1 << 63) else h
@@ -1217,8 +1227,7 @@ class Transaction:
             # tiny-file waves at low parallelism, no idle cores at high
             n_buckets_out = max(len(buckets or []) or nb, 1)
             par = self.cat.spark.sparkContext.defaultParallelism
-            k = int(os.environ.get("GRATE_WRITE_TASKS", "0")) \
-                or max(1, min(n_buckets_out, 2 * par))
+            k = max(1, min(n_buckets_out, 2 * par))
             out = out.repartition(k, "_bucket")
         if sort_keys:
             out = out.sortWithinPartitions("_bucket", *key_cols)
@@ -1361,13 +1370,23 @@ class Transaction:
                 {"path": e["path"], "schema_id": sid,
                  **({"bounds": e["bounds"]} if e.get("bounds") else {})}
                 for e in es]
+        return self._register_merge(name, t, files, keys, key_cols, seq,
+                                    touched, approx_keys)
+
+    def _register_merge(self, name: str, t: dict,
+                        files: dict[str, list[dict]], keys: DataFrame,
+                        key_cols: tuple[str, ...], seq: int,
+                        touched: list[int],
+                        approx_keys: int | None) -> dict:
+        """The tail both merge writers share: add the staged data files
+        to their buckets, write the batch's key markers at ``seq`` and
+        journal the op. Returns the merge stats."""
+        sid = t["schema_id"]
         for b, fs in files.items():
             self._extend_bucket(name, t, b, fs)
-
         entries = self._write_marker_file(name, sid, keys, key_cols,
                                           seq, approx_keys)
         self._append_markers(name, t, entries)
-
         self._ops.append({
             "op": "merge", "table": name, "schema_id": sid,
             "files": [e["path"] for fs in files.values() for e in fs],
@@ -1389,29 +1408,34 @@ class Transaction:
         file, stored unbucketed (read in full, reset by compact).
         Key-ordered rows give the parquet footer/page stats tight key
         ranges, so a point lookup's marker scan prunes to the page(s)
-        holding its key. Key sets bounded by the caller's hint are
-        written DRIVER-SIDE with pyarrow — the dedicated one-task
-        Spark job was pure fixed cost on the ingest path; bigger (or
-        unhinted) key sets keep the distributed write."""
+        holding its key. Null-free key sets bounded by the caller's
+        hint are written DRIVER-SIDE with pyarrow — the dedicated
+        one-task Spark job was pure fixed cost on the ingest path;
+        bigger (or unhinted) key sets keep the distributed write."""
         rel = self._stage_dir(name + ".markers")
         full = os.path.join(self.cat.root, rel)
         _PA_TYPES = {"string": "string", "bigint": "int64",
                      "int": "int32", "double": "float64"}
-        key_pa = [_PA_TYPES.get(f.dataType.simpleString())
-                  for f in keys.schema.fields]
+        key_pa = {f.name: _PA_TYPES.get(f.dataType.simpleString())
+                  for f in keys.schema.fields}
+        rows = None
         if approx_keys is not None \
                 and approx_keys <= self.DRIVER_MARKERS_MAX \
-                and all(key_pa):
+                and all(key_pa.get(c) for c in key_cols):
+            rows = [tuple(r[c] for c in key_cols) for r in keys.collect()]
+            if any(v is None for r in rows for v in r):
+                # Python cannot order None against values; the Spark
+                # write below sorts nulls first
+                rows = None
+        if rows is not None:
             import pyarrow as pa
             import pyarrow.parquet as pq
-            rows = sorted(tuple(r[c] for c in key_cols)
-                          for r in keys.collect())
+            rows.sort()
             cols = {c: [r[i] for r in rows]
                     for i, c in enumerate(key_cols)}
             cols["seq"] = [seq] * len(rows)
             pa_schema = pa.schema(
-                [(c, getattr(pa, tp)())
-                 for c, tp in zip(key_cols, key_pa)]
+                [(c, getattr(pa, key_pa[c])()) for c in key_cols]
                 + [("seq", pa.int64())])
             os.makedirs(full, exist_ok=True)
             pq.write_table(pa.table(cols, schema=pa_schema),
@@ -1469,20 +1493,8 @@ class Transaction:
         files = self._write_bucketed(name, t, data, schema, touched,
                                      extra_cols=("_seq",),
                                      pre_partitioned=pre_partitioned)
-        for b, fs in files.items():
-            self._extend_bucket(name, t, b, fs)
-
-        entries = self._write_marker_file(name, t["schema_id"], keys,
-                                          key_cols, seq, approx_keys)
-        self._append_markers(name, t, entries)
-
-        self._ops.append({
-            "op": "merge", "table": name, "schema_id": t["schema_id"],
-            "files": [e["path"] for fs in files.values() for e in fs],
-            "markers": [e["path"] for e in entries]})
-        new_paths = [os.path.join(self.cat.root, e["path"])
-                     for fs in files.values() for e in fs]
-        return {"buckets": touched, "files": new_paths}
+        return self._register_merge(name, t, files, keys, key_cols, seq,
+                                    touched, approx_keys)
 
     def compact(self, name: str,
                 buckets: list[int] | None = None) -> None:

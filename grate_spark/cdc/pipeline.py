@@ -29,6 +29,10 @@ The results table key is (repo, path); each row also carries
 
 from __future__ import annotations
 
+import os
+import time
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -41,6 +45,23 @@ WIDE_TABLE = "results_wide"
 METRICS_TABLE = "ingest_metrics"
 
 MERGE_KEY = ("repo", "path")
+
+
+def _batch_rows(events: DataFrame, lo: int, hi: int) -> DataFrame:
+    """Steps 1-2 above: the tabular events with lo < offset <= hi."""
+    return (events
+            .filter((F.col("offset") > lo) & (F.col("offset") <= hi))
+            .filter(F.col("path").rlike(TABULAR_SUFFIX_RE)))
+
+
+def _discard_prefetch(future) -> None:
+    """Release the winners cache of a prefetch nobody will use. A
+    prefetch that raised is dropped the same way: its range is either
+    never applied or recomputed by ``apply_batch``."""
+    try:
+        future.result()[0].unpersist()
+    except Exception:
+        pass
 
 
 def _wide_view(rows: DataFrame, n_cols: int,
@@ -67,49 +88,29 @@ def _wide_view(rows: DataFrame, n_cols: int,
 
 class CdcPipeline:
     def __init__(self, spark: SparkSession, lake_root: str,
-                 n_buckets: int = 32, n_partitions: int | None = None,
+                 n_buckets: int = 32,
                  wide_view: bool = True,
                  broadcast_winners_max: int = 1_000_000,
-                 bucket_blobs: bool | None = None,
-                 salt_buckets: bool | None = None,
+                 salt_buckets: bool = True,
                  wide_max_cols: int = 256,
                  python_encode: bool | None = None):
         self.spark = spark
         self.lake = LakeCatalog(spark, lake_root)
         self.n_buckets = n_buckets
-        self.n_partitions = n_partitions or int(
-            spark.sparkContext.defaultParallelism)
+        self.n_partitions = int(spark.sparkContext.defaultParallelism)
         self.wide_view = wide_view
         self.wide_max_cols = wide_max_cols
-        self.force_repartition = n_partitions is not None
-        # bucket_blobs (default ON): exchange the winning BLOBS on the
-        # merge bucket BEFORE extraction instead of exchanging the
-        # extracted rows after it — extraction and the parquet encode
-        # fuse into ONE stage: no barrier (the write starts as soon as
-        # any bucket's blobs are extracted, not after the slowest), no
-        # row-shuffle serialization, trivial dynamic-partition sort
-        # (one bucket per task), and the encode overlaps the UDF's
-        # Python wait instead of bursting all writers at once.
-        # Measured (interleaved A/B, 15k-file xlsx batch): ~20% faster
-        # at local[8], parity-to-faster at local[2], identical state.
-        import os as _os
-        if bucket_blobs is None:
-            bucket_blobs = _os.environ.get("GRATE_BUCKET_BLOBS", "1") == "1"
-        self.bucket_blobs = bucket_blobs
         # salt_buckets (default ON): sub-split merge buckets whose event
         # count exceeds an even per-core share of the batch, using a
         # per-bucket path-hash salt in the fused exchange (see
         # _salt_plan). Off -> one task per touched bucket, always.
-        if salt_buckets is None:
-            salt_buckets = _os.environ.get("GRATE_SALT_BUCKETS", "1") == "1"
         self.salt_buckets = salt_buckets
-        # python_encode (default OFF, requires bucket_blobs): run the
-        # merge write as the arrow-native fused writer — extraction AND
-        # parquet encode inside the Python worker (pyarrow), only
-        # per-file manifest rows returning to the driver. Trade-off,
-        # measured interleaved on the same event log: at LOW
-        # per-executor parallelism it removes the JVM half (Arrow row
-        # transfer back + parquet-mr) whose task time inflated
+        # python_encode: run the merge write as the arrow-native fused
+        # writer — extraction AND parquet encode inside the Python
+        # worker (pyarrow), only per-file manifest rows returning to the
+        # driver. Trade-off, measured interleaved on the same event log:
+        # at LOW per-executor parallelism it removes the JVM half (Arrow
+        # row transfer back + parquet-mr) whose task time inflated
         # super-linearly with thread count, and the identical Python
         # loop scales at the host's CPU ceiling
         # (scripts/twin_scaling.py, BENCH_TWIN_2_8.json); at local[32]
@@ -117,27 +118,22 @@ class CdcPipeline:
         # it ~1.6x SLOWER than parquet-mr (431 vs 710 ev/s warm). Real
         # clusters run 4-8 cores/executor where the fused path is the
         # right shape, but the default follows the measured single-JVM
-        # throughput. Default is ADAPTIVE on the session's parallelism
-        # (like AQE picking a join strategy): fused at <= 8 task
-        # threads per JVM (measured best 30.7s vs 53.6s at local[8] on
-        # the xlsx workload), parquet-mr above (710 vs 431 ev/s at
+        # throughput. Default (None) is ADAPTIVE on the session's
+        # parallelism (like AQE picking a join strategy): fused at <= 8
+        # task threads per JVM (measured best 30.7s vs 53.6s at local[8]
+        # on the xlsx workload), parquet-mr above (710 vs 431 ev/s at
         # local[32]); both paths are state-identical (gate-tested).
-        # GRATE_PY_ENCODE=0/1 still pins it either way.
         # See operators/fused_write.py.
         if python_encode is None:
-            env = _os.environ.get("GRATE_PY_ENCODE")
-            if env is not None:
-                python_encode = env == "1"
-            else:
-                # the measured crossover (fused wins at <= 8 task
-                # threads, parquet-mr above) is PER-JVM oversubscription,
-                # so gate on per-executor task slots: on a cluster
-                # defaultParallelism is TOTAL cores (8 execs x 4 cores =
-                # 32) and would wrongly pick parquet-mr for exactly the
-                # 4-8-core executors where fused is the right shape.
-                # local masters have one JVM = defaultParallelism slots.
-                python_encode = self._task_slots_per_jvm(spark) <= 8
-        self.python_encode = python_encode and self.bucket_blobs
+            # the measured crossover (fused wins at <= 8 task threads,
+            # parquet-mr above) is PER-JVM oversubscription, so gate on
+            # per-executor task slots: on a cluster defaultParallelism
+            # is TOTAL cores (8 execs x 4 cores = 32) and would wrongly
+            # pick parquet-mr for exactly the 4-8-core executors where
+            # fused is the right shape. local masters have one JVM =
+            # defaultParallelism slots.
+            python_encode = self._task_slots_per_jvm(spark) <= 8
+        self.python_encode = python_encode
         # batches up to this many events dedup via a broadcast semi-join
         # of the winning (repo, path, offset) keys, so blob payloads are
         # NEVER shuffled; bigger batches fall back to the full-row
@@ -202,16 +198,7 @@ class CdcPipeline:
 
     # -- one micro-batch -------------------------------------------------------
 
-    def apply_batch(self, events: DataFrame, lo: int, hi: int,
-                    batch_id: int, prefetched: tuple | None = None) -> dict:
-        """Apply events with lo < offset <= hi. Returns batch metrics."""
-        batch = (events
-                 .filter((F.col("offset") > lo) & (F.col("offset") <= hi))
-                 .filter(F.col("path").rlike(TABULAR_SUFFIX_RE)))
-        return self._apply(batch, lo, hi, batch_id, prefetched=prefetched)
-
-    def _batch_precompute(self, events: DataFrame, lo: int,
-                          hi: int) -> tuple:
+    def _precompute_from_batch(self, batch: DataFrame) -> tuple:
         """The two read-only jobs a batch needs before its merge — the
         latest-wins winner set (cached) and the grouping-sets stats
         rollup — computed from the immutable event log alone, so the
@@ -219,12 +206,6 @@ class CdcPipeline:
         i's merge (guide §2.6: overlap independent jobs; the stats
         tasks back-fill the cores the merge's tail leaves idle).
         Returns (winners_df_cached, rolled_rows)."""
-        batch = (events
-                 .filter((F.col("offset") > lo) & (F.col("offset") <= hi))
-                 .filter(F.col("path").rlike(TABULAR_SUFFIX_RE)))
-        return self._precompute_from_batch(batch)
-
-    def _precompute_from_batch(self, batch: DataFrame) -> tuple:
         w = Window.partitionBy("repo", "path").orderBy(F.desc("offset"))
         winners = (batch.select("repo", "path", "offset", "op")
                    .withColumn("_rn", F.row_number().over(w))
@@ -248,21 +229,12 @@ class CdcPipeline:
             .collect())
         return winners, rolled
 
-    def _apply(self, batch: DataFrame, lo: int, hi: int,
-               batch_id: int, prefetched: tuple | None = None) -> dict:
-        import os as _os
-        import time as _time
-        _dbg = _os.environ.get("GRATE_CDC_TIMING") == "1"
-        _t0 = _time.perf_counter()
-
-        def _mark(label):
-            nonlocal _t0
-            if _dbg:
-                now = _time.perf_counter()
-                print(f"    [batch {batch_id}] {label}: "
-                      f"{now - _t0:.2f}s", flush=True)
-                _t0 = now
-
+    def apply_batch(self, events: DataFrame, lo: int, hi: int,
+                    batch_id: int, prefetched: tuple | None = None) -> dict:
+        """Apply events with lo < offset <= hi in one lake commit.
+        Returns batch metrics; ``committed`` is False when the range
+        holds no tabular event (nothing is written then)."""
+        batch = _batch_rows(events, lo, hi)
         # latest-offset-wins per file key within the batch, computed on
         # KEY COLUMNS ONLY (repo, path, offset, op) — never the blob
         # payload. The winners set is one row per distinct key: small,
@@ -280,7 +252,6 @@ class CdcPipeline:
         else:
             winners, rolled = self._precompute_from_batch(batch)
         try:
-            _mark("part stats")
             # grouping sets over ZERO input rows yield ZERO output rows
             # (not a single all-null total row), so an empty batch —
             # e.g. a range containing only non-tabular paths — must
@@ -303,9 +274,6 @@ class CdcPipeline:
             # detected here for free, such a batch takes the window
             # path, whose row_number drops exact duplicates
             has_dup_offsets = total["n_offsets"] != n_events
-            if n_events == 0:
-                return {"batch_id": batch_id, "n_events": 0,
-                        "committed": False, "lo": lo, "hi": hi}
             touched = sorted(bucket_counts)
             part_stats = [{"partition": r["partition"], "n": r["n"],
                            "min_offset": r["min_offset"],
@@ -339,52 +307,41 @@ class CdcPipeline:
                     .drop("_rn"))
                 blobs = latest.select("repo", "path", "commit", "lang",
                                       "content", "offset")
-            shuffle_parts = int(self.spark.conf.get(
-                "spark.sql.shuffle.partitions"))
-            bucket_blobs = self.bucket_blobs
-            if bucket_blobs:
-                # cluster blobs on the merge bucket now so the extracted
-                # rows are born bucket-partitioned and the MoR write
-                # needs no exchange of its own (extract -> encode fuse).
-                # Base grain is one task per touched bucket; buckets
-                # whose event count exceeds an even per-core share are
-                # SUB-SPLIT with a per-bucket path salt, so a skewed
-                # batch (one hot repo -> one bucket) no longer
-                # serializes extraction+write behind a single task.
-                # partitionBy("_bucket") still yields one file per
-                # bucket PER TASK, so a salted bucket lands as n_sub
-                # files — the manifest already supports that.
-                bexpr = _bucket_expr(MERGE_KEY, self.n_buckets)
-                if self.python_encode:
-                    # arrow-native fused writer: attach lineage + the
-                    # JVM-computed bucket BEFORE the exchange, and
-                    # unwrap base64 on the map side so the shuffle
-                    # carries raw bytes (~25% fewer for binary blobs)
-                    from ..operators.extraction import unwrap_content
-                    blobs = unwrap_content(
-                        blobs.withColumn("src_offset",
-                                         F.col("offset")),
-                        keep=("src_offset",)).withColumn("_bucket",
-                                                         bexpr)
-                n_sub = self._salt_plan(bucket_counts, n_events) \
-                    if self.salt_buckets else {}
-                k_env = int(_os.environ.get("GRATE_WRITE_TASKS", "0"))
-                if any(s > 1 for s in n_sub.values()):
-                    pairs = [x for b, s in n_sub.items() if s > 1
-                             for x in (F.lit(b), F.lit(s))]
-                    mod = F.coalesce(
-                        F.element_at(F.create_map(*pairs), bexpr),
-                        F.lit(1))
-                    salt = F.pmod(F.xxhash64(F.col("path")), mod)
-                    k = k_env or sum(n_sub.values())
-                    blobs = blobs.repartition(k, bexpr, salt)
-                else:
-                    k = k_env or max(1, len(touched))
-                    blobs = blobs.repartition(k, bexpr)
-            elif self.force_repartition \
-                    and self.n_partitions != shuffle_parts:
-                blobs = blobs.repartition(self.n_partitions,
-                                          "repo", "path")
+            # cluster blobs on the merge bucket BEFORE extraction, so
+            # the extracted rows are born bucket-partitioned and the MoR
+            # write needs no exchange of its own: extraction and the
+            # parquet encode fuse into ONE stage (no barrier, no row
+            # shuffle, one bucket per task; ~20% faster than exchanging
+            # the extracted rows at local[8], interleaved A/B on a
+            # 15k-file xlsx batch). Base grain is one task per
+            # touched bucket; buckets whose event count exceeds an even
+            # per-core share are SUB-SPLIT with a per-bucket path salt,
+            # so a skewed batch (one hot repo -> one bucket) no longer
+            # serializes extraction+write behind a single task.
+            # partitionBy("_bucket") still yields one file per bucket
+            # PER TASK, so a salted bucket lands as n_sub files — the
+            # manifest already supports that.
+            bexpr = _bucket_expr(MERGE_KEY, self.n_buckets)
+            if self.python_encode:
+                # arrow-native fused writer: attach lineage + the
+                # JVM-computed bucket BEFORE the exchange, and unwrap
+                # base64 on the map side so the shuffle carries raw
+                # bytes (~25% fewer for binary blobs)
+                from ..operators.extraction import unwrap_content
+                blobs = unwrap_content(
+                    blobs.withColumn("src_offset", F.col("offset")),
+                    keep=("src_offset",)).withColumn("_bucket", bexpr)
+            n_sub = self._salt_plan(bucket_counts, n_events) \
+                if self.salt_buckets else {}
+            if any(s > 1 for s in n_sub.values()):
+                pairs = [x for b, s in n_sub.items() if s > 1
+                         for x in (F.lit(b), F.lit(s))]
+                mod = F.coalesce(
+                    F.element_at(F.create_map(*pairs), bexpr), F.lit(1))
+                salt = F.pmod(F.xxhash64(F.col("path")), mod)
+                blobs = blobs.repartition(sum(n_sub.values()), bexpr, salt)
+            else:
+                blobs = blobs.repartition(max(1, len(touched)), bexpr)
             txn = self.lake.begin()
             all_keys = winners.select("repo", "path")
             if self.python_encode:
@@ -397,11 +354,10 @@ class CdcPipeline:
                 from ..operators.fused_write import (ROW_SCHEMA,
                                                      extract_encode_files)
                 rel = txn.stage_rel(RESULTS_TABLE)
-                full = _os.path.join(self.lake.root, rel)
+                full = os.path.join(self.lake.root, rel)
                 manifest = extract_encode_files(
                     blobs, full, rel, txn.next_seq(),
                     batch_id).collect()
-                _mark("fused extract->encode (arrow-native)")
                 entries_by_bucket: dict[str, list[dict]] = {}
                 for r in manifest:
                     entries_by_bucket.setdefault(
@@ -421,7 +377,6 @@ class CdcPipeline:
                                        for r in manifest))
                 max_cols = int(max((r["max_cols"] for r in manifest),
                                    default=0))
-                _mark("register files + markers")
             else:
                 rows = with_content_sha(extract_files(blobs))
 
@@ -445,14 +400,12 @@ class CdcPipeline:
                     F.max(F.size("cells")).alias("max_cols"))
 
                 # ONE heavy job: extraction fused straight into the MoR
-                # merge write (map-side extract -> bucket shuffle ->
-                # write)
+                # merge write (blob bucket exchange -> extract -> write)
                 stats = txn.merge_replace_keys(
                     RESULTS_TABLE, rows, all_keys, MERGE_KEY,
                     self.n_buckets, touched=touched,
-                    pre_partitioned=bucket_blobs,
+                    pre_partitioned=True,
                     approx_keys=n_events)
-                _mark("merge results (extraction fused)")
 
                 # the merge's write action completed, so the observed
                 # metrics are available without touching the data again
@@ -460,7 +413,6 @@ class CdcPipeline:
                 n_rows = int(vals["n_rows"] or 0)
                 n_error_rows = int(vals["n_error_rows"] or 0)
                 max_cols = int(vals["max_cols"] or 0)
-                _mark("row stats (observed on the merge write)")
 
             if self.wide_view and stats["files"]:
                 # the wide merge needs the typed-width projection, whose
@@ -489,7 +441,6 @@ class CdcPipeline:
                                        else None,
                                        pre_partitioned=same_spec,
                                        approx_keys=n_events)
-                _mark("merge wide view (fused, no exchange)")
 
             # per-batch ingest metrics buffer — flushed to the metrics
             # table in one write by flush_metrics() (replay calls it);
@@ -506,12 +457,20 @@ class CdcPipeline:
                  "partitions": part_stats,
                  "buckets": stats["buckets"]})
             txn.commit()
-            _mark("manifest commit")
             return {"batch_id": batch_id, "n_events": n_events,
                     "n_rows": n_rows, "n_error_rows": n_error_rows,
                     "committed": True, "lo": lo, "hi": hi}
         finally:
             winners.unpersist()
+
+    def _advance_checkpoint(self, batch_id: int, lo: int, hi: int) -> None:
+        """Commit the offset watermark alone, for a range that held no
+        tabular event, so the tail moves past it."""
+        txn = self.lake.begin()
+        txn.set_checkpoint({"global": hi},
+                           {"batch_id": batch_id, "lo": lo, "hi": hi,
+                            "partitions": [], "buckets": []})
+        txn.commit()
 
     def flush_metrics(self) -> None:
         """Write buffered per-batch ingest metrics in one commit.
@@ -563,10 +522,6 @@ class CdcPipeline:
         squash them into one max(seq)-per-key file — O(marker keys),
         no data rewrite, so long replays don't degrade reads with
         thousands of tiny marker unions."""
-        import os as _os
-        import time as _time
-        _dbg = _os.environ.get("GRATE_CDC_TIMING") == "1"
-        _t = _time.perf_counter()
         # batch [lo, hi] ranges are pure arithmetic over (checkpoint,
         # batch_size, hwm) — the checkpoint advances to hi whether or
         # not a batch commits rows — so each batch's read-only jobs
@@ -577,31 +532,28 @@ class CdcPipeline:
         # (guide §2.6). A prefetched hi past the hwm selects exactly
         # the (lo, hwm] rows, so the optimistic first guess also
         # covers a final short batch.
-        from concurrent.futures import ThreadPoolExecutor
-        pool = None
-        pending = None  # (lo, hi, future)
         self._sync_bucket_spec()
         ckpt0 = int(self.lake.checkpoint().get("global", 0))
+        pool = ThreadPoolExecutor(max_workers=1,
+                                  thread_name_prefix="cdc-prefetch")
+
+        def prefetch(lo: int, hi: int) -> tuple:
+            return (lo, hi, pool.submit(
+                lambda: self._precompute_from_batch(
+                    _batch_rows(events, lo, hi))))
+
+        pending = None  # (lo, hi, future)
         if batch_size is not None and (max_batches is None
                                        or max_batches > 0):
-            pool = ThreadPoolExecutor(max_workers=1,
-                                      thread_name_prefix="cdc-prefetch")
-            pending = (ckpt0, ckpt0 + batch_size,
-                       pool.submit(self._batch_precompute, events,
-                                   ckpt0, ckpt0 + batch_size))
-        hwm_row = events.agg(F.max("offset").alias("h")).collect()[0]
-        if _dbg:
-            print(f"    [replay] hwm scan: "
-                  f"{_time.perf_counter() - _t:.2f}s", flush=True)
-        hwm = hwm_row["h"] or 0
+            pending = prefetch(ckpt0, ckpt0 + batch_size)
+        hwm = events.agg(F.max("offset").alias("h")).collect()[0]["h"] or 0
         results = []
-        n = 0
         try:
             while True:
                 ckpt = int(self.lake.checkpoint().get("global", 0))
                 if ckpt >= hwm:
                     break
-                if max_batches is not None and n >= max_batches:
+                if max_batches is not None and len(results) >= max_batches:
                     break
                 hi = hwm if batch_size is None \
                     else min(ckpt + batch_size, hwm)
@@ -613,52 +565,25 @@ class CdcPipeline:
                             or (hi == hwm and pending[1] >= hwm)):
                         pre = pending[2].result()
                     else:  # resumed elsewhere: discard the prefetch
-                        pending[2].result()[0].unpersist()
+                        _discard_prefetch(pending[2])
                     pending = None
-                nxt_lo = hi
                 nxt_hi = hwm if batch_size is None \
                     else min(hi + batch_size, hwm)
-                if nxt_lo < nxt_hi and (max_batches is None
-                                        or n + 1 < max_batches):
-                    if pool is None:
-                        pool = ThreadPoolExecutor(
-                            max_workers=1,
-                            thread_name_prefix="cdc-prefetch")
-                    pending = (nxt_lo, nxt_hi,
-                               pool.submit(self._batch_precompute,
-                                           events, nxt_lo, nxt_hi))
-                import time as _time
-                t0 = _time.perf_counter()
+                if hi < nxt_hi and (max_batches is None
+                                    or len(results) + 1 < max_batches):
+                    pending = prefetch(hi, nxt_hi)
+                t0 = time.perf_counter()
                 res = self.apply_batch(events, ckpt, hi, batch_id,
                                        prefetched=pre)
-                res["seconds"] = _time.perf_counter() - t0
-                if not res.get("committed"):
-                    # nothing tabular in range: still advance the
-                    # checkpoint so replay terminates (offset watermark
-                    # only)
-                    txn = self.lake.begin()
-                    txn.set_checkpoint({"global": hi},
-                                       {"batch_id": batch_id,
-                                        "lo": ckpt,
-                                        "hi": hi, "partitions": [],
-                                        "buckets": []})
-                    txn.commit()
+                res["seconds"] = time.perf_counter() - t0
+                if not res["committed"]:
+                    self._advance_checkpoint(batch_id, ckpt, hi)
                 results.append(res)
-                n += 1
         finally:
             if pending is not None:
-                try:
-                    pending[2].result()[0].unpersist()
-                except Exception:
-                    pass
-            if pool is not None:
-                pool.shutdown()
-        _t = _time.perf_counter()
+                _discard_prefetch(pending[2])
+            pool.shutdown()
         self.flush_metrics()
-        if _dbg:
-            print(f"    [replay] flush_metrics: "
-                  f"{_time.perf_counter() - _t:.2f}s", flush=True)
-        _t = _time.perf_counter()
         if compact_after_markers is not None:
             m = self.lake.manifest()
             for tname in (RESULTS_TABLE, WIDE_TABLE):
@@ -696,9 +621,6 @@ class CdcPipeline:
                     txn.squash_markers(tname)
                     txn.commit()
                     m = self.lake.manifest()
-        if _dbg:
-            print(f"    [replay] compaction check: "
-                  f"{_time.perf_counter() - _t:.2f}s", flush=True)
         return results
 
     def compact(self) -> None:
@@ -724,21 +646,13 @@ class CdcPipeline:
         def _sink(df: DataFrame, _spark_batch_id: int) -> None:
             self._sync_bucket_spec()
             ckpt = int(self.lake.checkpoint().get("global", 0))
-            fresh = (df.filter(F.col("offset") > ckpt)
-                     .filter(F.col("path").rlike(TABULAR_SUFFIX_RE)))
-            hi_row = df.agg(F.max("offset").alias("h")).collect()[0]
-            hi = hi_row["h"]
+            hi = df.agg(F.max("offset").alias("h")).collect()[0]["h"]
             if hi is None or hi <= ckpt:
                 return
             batch_id = len(self.lake.lineage()) + 1
-            res = self._apply(fresh, ckpt, int(hi), batch_id)
-            if not res.get("committed"):
-                txn = self.lake.begin()
-                txn.set_checkpoint({"global": int(hi)},
-                                   {"batch_id": batch_id, "lo": ckpt,
-                                    "hi": int(hi), "partitions": [],
-                                    "buckets": []})
-                txn.commit()
+            res = self.apply_batch(df, ckpt, int(hi), batch_id)
+            if not res["committed"]:
+                self._advance_checkpoint(batch_id, ckpt, int(hi))
 
         stream = (self.spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", max_files_per_trigger)

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from . import (md5_bigint_expr, md5_bigint_sql, word_shingles_expr,
                word_shingles_sql)
-from ..queries_util import spread, table
+from ..queries_util import sorted_epilogue, spread, table
 
 N_HASHES = 8
 N_BANDS = 4  # rows-per-band r = 2
@@ -309,9 +309,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf: str,
                      F.col("b.doc_id").alias("doc_b"),
                      F.round(inter.cast("double") / union, 4)
                      .alias("jaccard")))
-    # lazy lineage cut: the global sort's range-sampling pass would
-    # otherwise re-execute the whole pair join to pick bounds
-    return pairs.localCheckpoint(eager=False).orderBy("doc_a", "doc_b")
+    return sorted_epilogue(pairs, "doc_a", "doc_b")
 
 
 NGRAM_JACCARD_PAIRS_SQL = f"""
@@ -351,9 +349,7 @@ def lsh_jaccard_neardups(spark: SparkSession, sf: str) -> DataFrame:
     re-execute the gram joins; ``_lsh_jaccard_verify`` exposes the
     uncut verify plan for the plan gates."""
     verify, cands = _lsh_jaccard_verify(spark, sf)
-    out = (verify
-           .localCheckpoint(eager=False)
-           .orderBy("doc_a", "doc_b"))
+    out = sorted_epilogue(verify, "doc_a", "doc_b")
     # release the candidate cache when the caller drops the result
     # frame: without this, every call in a long-lived session left a
     # MEMORY_AND_DISK materialization registered in the CacheManager

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..queries_util import spread, table
+from ..queries_util import sorted_epilogue, spread, table
 
 N_QUERIES = 5      # vec_id < 5 are the query vectors
 TOP_K = 3
@@ -68,14 +68,11 @@ def cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
              .filter(F.col("vec_id") != F.col("query_id"))
              .withColumn("cos", F.expr(_cos_expr("qv", "embedding"))))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "vec_id")
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    "cos", "rank")
-            # lazy lineage cut below the global sort: the range
-            # sampling pass would re-run the scoring subtree
-            .localCheckpoint(eager=False)
-            .orderBy("query_id", "rank"))
+    top = (pairs.withColumn("rank", F.row_number().over(w))
+           .filter(F.col("rank") <= TOP_K)
+           .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                   "cos", "rank"))
+    return sorted_epilogue(top, "query_id", "rank")
 
 
 COSINE_TOPK_SQL = f"""
@@ -119,13 +116,11 @@ def ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
                             & (F.col("vec_id") != F.col("query_id")))
             .withColumn("cos", F.expr(_cos_expr("qv", "embedding"))))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "vec_id")
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    "cos", "rank")
-            # lazy lineage cut below the global sort (see cosine_topk)
-            .localCheckpoint(eager=False)
-            .orderBy("query_id", "rank"))
+    top = (cand.withColumn("rank", F.row_number().over(w))
+           .filter(F.col("rank") <= TOP_K)
+           .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                   "cos", "rank"))
+    return sorted_epilogue(top, "query_id", "rank")
 
 
 NEARDUP_THRESHOLD = 0.85
@@ -429,13 +424,11 @@ def ann_topk_trained(emb: DataFrame, query_ids: list, centroids: list,
                             & (F.col("vec_id") != F.col("query_id")))
             .withColumn("cos", F.expr(_cos_expr("qv", "v"))))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "vec_id")
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= top_k)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    "cos", "rank")
-            # lazy lineage cut below the global sort (see cosine_topk)
-            .localCheckpoint(eager=False)
-            .orderBy("query_id", "rank"))
+    top = (cand.withColumn("rank", F.row_number().over(w))
+           .filter(F.col("rank") <= top_k)
+           .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                   "cos", "rank"))
+    return sorted_epilogue(top, "query_id", "rank")
 
 
 TRAINED_K = 4        # Lloyd clusters for the oracle-checked trained IVF

@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .queries_util import sorted_epilogue
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
@@ -321,9 +323,7 @@ def extract_csv_roundtrip(spark, sf):
                F.element_at("cells", 1).cast("long").alias("doc_id"),
                F.element_at("cells", 2).alias("lang"),
                F.element_at("cells", 3).cast("long").alias("n_chars")))
-    # lazy lineage cut: the global sort's range-sampling pass would
-    # otherwise run the extraction UDTF a second time to pick bounds
-    return out.localCheckpoint(eager=False).orderBy("source", "row_id")
+    return sorted_epilogue(out, "source", "row_id")
 
 
 EXTRACT_CSV_ROUNDTRIP_SQL = """
@@ -348,9 +348,7 @@ def extract_csv_sha(spark, sf):
     out = rows.select(
         F.regexp_replace("sheet", r"\.csv$", "").alias("source"),
         F.col("row_id"), F.col("content_sha256"))
-    # lazy lineage cut: keeps the sort's range sampling from re-running
-    # the extraction + sha pass (see extract_csv_roundtrip)
-    return out.localCheckpoint(eager=False).orderBy("source", "row_id")
+    return sorted_epilogue(out, "source", "row_id")
 
 
 EXTRACT_CSV_SHA_SQL = """
@@ -434,7 +432,7 @@ def cdc_replay_state(spark, sf):
 
     res = pipe.results().filter(F.col("error").isNull()
                                 & (F.col("row_id") >= 1))
-    return (res.select(
+    return sorted_epilogue(res.select(
         F.regexp_replace("path", r"\.csv$", "").alias("source"),
         "row_id",
         F.try_element_at("cells", F.lit(1)).cast("long").alias("doc_id"),
@@ -442,11 +440,7 @@ def cdc_replay_state(spark, sf):
         F.try_element_at("cells", F.lit(3)).cast("long")
         .alias("n_chars"),
         F.try_element_at("cells", F.lit(4)).cast("long")
-        .alias("quality"))
-        # lazy lineage cut: the sort's range sampling re-runs the MoR
-        # read (file union + marker anti-join) otherwise
-        .localCheckpoint(eager=False)
-        .orderBy("source", "row_id"))
+        .alias("quality")), "source", "row_id")
 
 
 def _cdc_replay_state_sql() -> str:
@@ -525,7 +519,7 @@ def cdc_time_travel(spark, sf):
 
     rows = pipe.lake.read_tag(RESULTS_TABLE, "phase1")
     rows = rows.filter(F.col("error").isNull() & (F.col("row_id") >= 1))
-    return (rows.select(
+    return sorted_epilogue(rows.select(
         F.regexp_replace("path", r"\.csv$", "").alias("source"),
         "row_id",
         F.try_element_at("cells", F.lit(1)).cast("long").alias("doc_id"),
@@ -533,11 +527,7 @@ def cdc_time_travel(spark, sf):
         F.try_element_at("cells", F.lit(3)).cast("long")
         .alias("n_chars"),
         F.try_element_at("cells", F.lit(4)).cast("long")
-        .alias("quality"))
-        # lazy lineage cut: the sort's range sampling re-runs the MoR
-        # read (file union + marker anti-join) otherwise
-        .localCheckpoint(eager=False)
-        .orderBy("source", "row_id"))
+        .alias("quality")), "source", "row_id")
 
 
 # point lookup = the reconstructed state filtered to one deterministic
@@ -579,7 +569,7 @@ def cdc_point_lookup(spark, sf):
     rows = pipe.lake.read_key(RESULTS_TABLE,
                               {"repo": tgt["repo"], "path": tgt["path"]})
     rows = rows.filter(F.col("error").isNull() & (F.col("row_id") >= 1))
-    return (rows.select(
+    return sorted_epilogue(rows.select(
         F.regexp_replace("path", r"\.csv$", "").alias("source"),
         "row_id",
         F.try_element_at("cells", F.lit(1)).cast("long").alias("doc_id"),
@@ -587,9 +577,7 @@ def cdc_point_lookup(spark, sf):
         F.try_element_at("cells", F.lit(3)).cast("long")
         .alias("n_chars"),
         F.try_element_at("cells", F.lit(4)).cast("long")
-        .alias("quality"))
-        .localCheckpoint(eager=False)
-        .orderBy("row_id"))
+        .alias("quality")), "row_id")
 
 
 def cdc_changes_feed(spark, sf):
@@ -620,7 +608,7 @@ def cdc_changes_feed(spark, sf):
                     & (F.col("_change_type") != "delete"))
             .drop("_change_type", "_commit_version", "_vmax"))
     live = live.filter(F.col("error").isNull() & (F.col("row_id") >= 1))
-    return (live.select(
+    return sorted_epilogue(live.select(
         F.regexp_replace("path", r"\.csv$", "").alias("source"),
         "row_id",
         F.try_element_at("cells", F.lit(1)).cast("long").alias("doc_id"),
@@ -628,11 +616,7 @@ def cdc_changes_feed(spark, sf):
         F.try_element_at("cells", F.lit(3)).cast("long")
         .alias("n_chars"),
         F.try_element_at("cells", F.lit(4)).cast("long")
-        .alias("quality"))
-        # lazy lineage cut: the sort's range sampling re-runs the MoR
-        # read (file union + marker anti-join) otherwise
-        .localCheckpoint(eager=False)
-        .orderBy("source", "row_id"))
+        .alias("quality")), "source", "row_id")
 
 
 def cdc_wide_state(spark, sf):
@@ -659,15 +643,13 @@ def cdc_wide_state(spark, sf):
     wide = pipe.results_wide().filter(F.col("row_id") >= 1)
     quality = (F.col("c004").cast("long") if "c004" in wide.columns
                else F.lit(None).cast("long"))
-    return (wide.select(
+    return sorted_epilogue(wide.select(
         F.regexp_replace("path", r"\.csv$", "").alias("source"),
         "row_id",
         F.col("c001").cast("long").alias("doc_id"),
         F.col("c002").alias("lang"),
         F.col("c003").cast("long").alias("n_chars"),
-        quality.alias("quality"))
-        .localCheckpoint(eager=False)
-        .orderBy("source", "row_id"))
+        quality.alias("quality")), "source", "row_id")
 
 
 # ---------------------------------------------------------------------------

@@ -34,3 +34,14 @@ def spread(df: DataFrame) -> DataFrame:
     except Exception:
         pass  # un-probe-able plan: fall through to the safe fan-out
     return df.repartition(par)
+
+
+def sorted_epilogue(df: DataFrame, *cols) -> DataFrame:
+    """A query's final global sort, below a lazy lineage cut. A global
+    ``orderBy`` first runs a range-sampling job over its input to pick
+    partition bounds; without the cut that job re-executes the whole
+    subtree feeding the sort (an extraction UDTF, a MoR read, a pair
+    join, a scoring fold) a second time. ``localCheckpoint(eager=False)``
+    keeps the blocks the sampling job computes, and the sort reads
+    them."""
+    return df.localCheckpoint(eager=False).orderBy(*cols)

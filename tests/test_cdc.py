@@ -2,6 +2,7 @@
 out-of-order offsets, deletes, schema evolution, checkpoint/resume,
 crash injection, lineage/metrics, and the sha256 golden parity gate."""
 
+import functools
 import os
 
 import pytest
@@ -89,6 +90,23 @@ def test_lake_merge_replace(spark, tmp_path):
     got = sorted((r["path"], r["row_id"], r["v"])
                  for r in cat.read("t").collect())
     assert got == [("p1", 0, "X"), ("p3", 0, "w")]
+
+
+def test_lake_merge_null_key(spark, tmp_path):
+    """A key set holding a null (e.g. an event whose repo is null) is
+    small enough for the driver-side marker write, which cannot order
+    None against strings: it takes the Spark write and commits."""
+    cat = LakeCatalog(spark, str(tmp_path / "lake"))
+    df = spark.createDataFrame(
+        [("r", "p1", 0, "x"), (None, "p2", 0, "y"), ("q", "p3", 0, "z")],
+        "repo string, path string, row_id int, v string")
+    txn = cat.begin()
+    txn.merge_replace_keys("t", df, df.select("repo", "path"),
+                           ("repo", "path"), n_buckets=4, approx_keys=3)
+    txn.commit()
+    got = sorted((r["path"], r["repo"], r["v"])
+                 for r in cat.read("t").collect())
+    assert got == [("p1", "r", "x"), ("p2", None, "y"), ("p3", "q", "z")]
 
 
 def test_lake_schema_evolution_on_merge(spark, tmp_path):
@@ -503,11 +521,51 @@ def test_lake_commit_conflict(spark, tmp_path):
 # --------------------------------------------------------------------------
 # pipeline semantics over the fixture event log
 
+BASIC_TSV = ("a\tb\tc\td\n1\tHello\t42.0\t0.0\n2\tWorld\t99.1\t0.01\n"
+             "3\tThis\t7e8\t0.001\n4\tTests\t2.4e-8\t0.0001\n"
+             "5\tText\t0.0001\t0.00001")
+BASIC2_TSV = ("a\tb\tc\td\n1\tHello\t42.00\t0.00000\n"
+              "2\tWorld\t99.10\t0.01000\n3\tThis\t7E+08\t0.00100\n"
+              "4\tTests\t2.4E-08\t0.00010\n5\tText\t0.00010\t0.00001\n")
+MULTI_TEST_TSV = "".join(
+    "\t".join(row) + "\n" for row in (
+        ("name", "qty", "price", "when", "flag", "ratio", "code"),
+        ("apple", "1", "0.5", "July 11, 2004", "TRUE", "1/2", "A1"),
+        ("pear", "42", "1.25", "11 Jul 00", "FALSE", "42 1/3", "B2"),
+        ("fig", "", "", "", "", "", ""),
+        ("plum", "1000000000000", "7", "9-Sep", "TRUE", "9999 9/10", "C3"),
+        ("kiwi", "-3", "2.5e-3", "Jun-42", "FALSE", "3/4", "D4")))
+
+
+@functools.cache
+def fixture_blobs() -> dict[str, bytes]:
+    """The fixture set ``fixture_events`` scripts its history over:
+    grate's testdata when it is checked out, else an in-repo stand-in
+    under the names the tests use — basic.tsv and basic2.tsv (its
+    update), a 7-column multi_test.tsv, the synthetic BIFF workbook as
+    testing.xls (deleted by the script) and a generated basic.xlsx."""
+    if os.path.isdir(REF):
+        blobs = {}
+        for fn in os.listdir(REF):
+            if fn.endswith((".xls", ".xlsx", ".csv", ".tsv")):
+                with open(os.path.join(REF, fn), "rb") as f:
+                    blobs[fn] = f.read()
+        return blobs
+    from grate_spark.cdc.bench import _csv_body_to_xlsx
+    from tests.test_xls_synthetic import build_workbook
+    return {"basic.tsv": BASIC_TSV.encode(),
+            "basic2.tsv": BASIC2_TSV.encode(),
+            "multi_test.tsv": MULTI_TEST_TSV.encode(),
+            "testing.xls": build_workbook(),
+            "basic.xlsx": _csv_body_to_xlsx(
+                BASIC_TSV.replace("\t", ","))}
+
+
 @pytest.fixture(scope="module")
 def fixture_replayed(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("cdc_fixtures"))
     pipe = CdcPipeline(spark, root, n_buckets=8)
-    events = fixture_events(spark)
+    events = fixture_events(spark, fixture_blobs())
     stats = pipe.replay(events, batch_size=10)
     return pipe, events, stats
 
@@ -516,7 +574,6 @@ needs_ref = pytest.mark.skipif(not os.path.isdir(REF),
                                reason="reference testdata not available")
 
 
-@needs_ref
 def test_replay_final_paths(fixture_replayed):
     pipe, _, _ = fixture_replayed
     res = pipe.results()
@@ -530,15 +587,14 @@ def test_replay_final_paths(fixture_replayed):
     assert len(err) == 1 and err[0]["error"] is not None
 
 
-@needs_ref
 def test_replay_update_wins(fixture_replayed):
     """basic.tsv was updated to basic2.tsv's content — final rows must be
     the v2 content, proving per-path replace + latest-offset-wins."""
     pipe, _, _ = fixture_replayed
     got = (pipe.results().filter(F.col("path") == "basic.tsv")
            .orderBy("row_id").select("cells").collect())
-    with open(os.path.join(REF, "basic2.tsv")) as f:
-        want = [ln.split("\t") for ln in f.read().splitlines()]
+    want = [ln.split("\t")
+            for ln in fixture_blobs()["basic2.tsv"].decode().splitlines()]
     assert [r["cells"] for r in got] == want
 
 
@@ -567,13 +623,12 @@ def test_replay_sha256_golden_parity(fixture_replayed):
     assert n_checked > 30  # sanity: the gate actually ran
 
 
-@needs_ref
 def test_replay_idempotent_reapply(spark, tmp_path):
     """Applying the same batch range twice yields the identical final
     state (the exactly-once invariant under at-least-once delivery)."""
     root = str(tmp_path / "lake")
     pipe = CdcPipeline(spark, root, n_buckets=8, wide_view=False)
-    events = fixture_events(spark)
+    events = fixture_events(spark, fixture_blobs())
     hwm = events.agg(F.max("offset")).collect()[0][0]
     pipe.apply_batch(events, 0, hwm, batch_id=1)
     s1 = state_fingerprint(pipe.results())
@@ -582,11 +637,10 @@ def test_replay_idempotent_reapply(spark, tmp_path):
     assert s1 == s2
 
 
-@needs_ref
 def test_replay_batchsize_invariance(spark, tmp_path):
     """One giant batch vs many small batches converge to the same state
     (out-of-order tolerant within the windowed dedup)."""
-    events = fixture_events(spark)
+    events = fixture_events(spark, fixture_blobs())
     pipe_a = CdcPipeline(spark, str(tmp_path / "a"), n_buckets=8,
                          wide_view=False)
     pipe_a.replay(events)  # single batch
@@ -599,11 +653,10 @@ def test_replay_batchsize_invariance(spark, tmp_path):
         state_fingerprint(pipe_b.results(), cols)
 
 
-@needs_ref
 def test_checkpoint_resume(spark, tmp_path):
     """Stop mid-replay, build a NEW pipeline over the same lake dir, and
     finish — the checkpoint in the manifest drives the resume."""
-    events = fixture_events(spark)
+    events = fixture_events(spark, fixture_blobs())
     root = str(tmp_path / "lake")
     pipe = CdcPipeline(spark, root, n_buckets=8, wide_view=False)
     pipe.replay(events, batch_size=5, max_batches=2)
@@ -619,11 +672,10 @@ def test_checkpoint_resume(spark, tmp_path):
         state_fingerprint(ref.results())
 
 
-@needs_ref
 def test_crash_before_commit_is_invisible(spark, tmp_path):
     """Data files staged but manifest never published: the snapshot is
     unchanged and a re-run converges to the correct state."""
-    events = fixture_events(spark)
+    events = fixture_events(spark, fixture_blobs())
     root = str(tmp_path / "lake")
     pipe = CdcPipeline(spark, root, n_buckets=8, wide_view=False)
     pipe.replay(events, batch_size=8, max_batches=1)
@@ -653,7 +705,6 @@ def test_crash_before_commit_is_invisible(spark, tmp_path):
         state_fingerprint(ref.results())
 
 
-@needs_ref
 def test_lineage_and_metrics(fixture_replayed):
     pipe, events, stats = fixture_replayed
     lin = pipe.lake.lineage()
@@ -671,7 +722,6 @@ def test_lineage_and_metrics(fixture_replayed):
     assert m.filter(F.col("n_error_rows") > 0).count() >= 1
 
 
-@needs_ref
 def test_wide_view_schema_evolution_fixtures(fixture_replayed):
     """multi_test has 7 columns, basic 4 — the wide table must have
     widened to the max and carry NULLs for narrow sheets."""
@@ -683,11 +733,10 @@ def test_wide_view_schema_evolution_fixtures(fixture_replayed):
     assert row["c001"] == "1" and row["c007"] is None
 
 
-@needs_ref
 def test_streaming_foreachbatch_matches_batch_replay(spark, tmp_path):
     """The Structured Streaming path (file-source + foreachBatch) and
     the batch replay loop converge to the identical table state."""
-    events = fixture_events(spark)
+    events = fixture_events(spark, fixture_blobs())
     # WAL-ordered delivery: one file per offset chunk, written in order
     ev_dir = str(tmp_path / "events_stream")
     os.makedirs(ev_dir)
@@ -948,22 +997,29 @@ def test_salt_plan_uniform_batches_unchanged(spark):
     assert plan[1] == 1 and plan[2] == 1
 
 
-def test_replay_bucket_blobs_mode_equivalence(spark, tmp_path):
-    """The bucket_blobs plan (blobs exchanged on the merge bucket before
-    extraction, write without a row shuffle) must converge to the exact
-    state of the default plan (row exchange after extraction)."""
-    events = fixture_events(spark)
-    default = CdcPipeline(spark, str(tmp_path / "row"), n_buckets=8,
-                          wide_view=False, bucket_blobs=False)
-    assert not default.bucket_blobs  # genuine row-exchange baseline
-    default.replay(events)
-    fused = CdcPipeline(spark, str(tmp_path / "blob"), n_buckets=8,
-                        wide_view=False, bucket_blobs=True)
-    fused.replay(events)
+def test_fixture_replay_matches_direct_extraction(spark, tmp_path):
+    """Replaying the fixture log with either writer lands exactly the
+    rows that direct extraction of the log's final blobs yields (the
+    latest event per path, deletes and non-tabular paths dropped)."""
+    from pyspark.sql import Window
+
+    from grate_spark.extract import TABULAR_SUFFIX_RE
+    from grate_spark.operators.extraction import (extract_files,
+                                                  with_content_sha)
+
+    events = fixture_events(spark, fixture_blobs())
+    w = Window.partitionBy("repo", "path").orderBy(F.desc("offset"))
+    final = (events.withColumn("_rn", F.row_number().over(w))
+             .filter((F.col("_rn") == 1) & (F.col("op") != "D")
+                     & F.col("path").rlike(TABULAR_SUFFIX_RE)))
     cols = ["repo", "path", "sheet", "row_id", "cells", "content_sha256",
             "error"]
-    assert state_fingerprint(default.results(), cols) == \
-        state_fingerprint(fused.results(), cols)
+    want = state_fingerprint(with_content_sha(extract_files(final)), cols)
+    for enc in (True, False):
+        pipe = CdcPipeline(spark, str(tmp_path / f"enc{enc}"), n_buckets=8,
+                           wide_view=False, python_encode=enc)
+        pipe.replay(events, batch_size=4)
+        assert state_fingerprint(pipe.results(), cols) == want, enc
 
 
 def test_replay_non_tabular_only_range_advances_checkpoint(spark, tmp_path):
@@ -991,6 +1047,81 @@ def test_replay_non_tabular_only_range_advances_checkpoint(spark, tmp_path):
     assert len(committed) == 1 and committed[0]["n_events"] == 1
     # both grid rows of the csv blob (header + data line) landed
     assert pipe.results().filter(F.col("path") == "data.csv").count() == 2
+
+
+def test_replay_releases_winners_cache(spark, tmp_path):
+    """Every batch's cached winner set, prefetched or not, is released
+    by the end of a multi-batch replay: a long-lived session tailing a
+    log must not accumulate CacheManager entries."""
+    def cache_mgr_empty():
+        return bool(spark._jsparkSession.sharedState()
+                    .cacheManager().isEmpty())
+
+    spark.catalog.clearCache()  # deterministic baseline under -p ordering
+    pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=4,
+                       wide_view=False)
+    stats = pipe.replay(fixture_events(spark, fixture_blobs()),
+                        batch_size=3)
+    assert len(stats) >= 3
+    assert cache_mgr_empty()
+
+
+def test_failed_prefetch_of_discarded_range_does_not_abort_replay(
+        spark, tmp_path):
+    """The prefetch of batch i+1's read-only jobs runs while batch i
+    merges. When batch i's commit moves the checkpoint past that range
+    (here: a wrapped apply_batch that also applies the next range), the
+    prefetch is discarded, and one that raised must not abort the
+    replay."""
+    import threading
+
+    events = fixture_events(spark, fixture_blobs())
+    pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=4,
+                       wide_view=False)
+    real_precompute = pipe._precompute_from_batch
+    prefetches = []
+
+    def flaky_precompute(batch):
+        if threading.current_thread().name.startswith("cdc-prefetch"):
+            prefetches.append(batch)
+            if len(prefetches) == 2:  # batch 2's range, (3, 6]
+                raise RuntimeError("injected prefetch failure")
+        return real_precompute(batch)
+
+    real_apply = pipe.apply_batch
+
+    def apply_and_run_ahead(events, lo, hi, batch_id, prefetched=None):
+        res = real_apply(events, lo, hi, batch_id, prefetched=prefetched)
+        if batch_id == 1:
+            assert real_apply(events, hi, hi + 4, 2)["committed"]
+        return res
+
+    pipe._precompute_from_batch = flaky_precompute
+    pipe.apply_batch = apply_and_run_ahead
+    pipe.replay(events, batch_size=3)
+    assert len(prefetches) >= 2
+    hwm = events.agg(F.max("offset")).collect()[0][0]
+    assert int(pipe.lake.checkpoint()["global"]) == hwm
+
+    ref = CdcPipeline(spark, str(tmp_path / "ref"), n_buckets=4,
+                      wide_view=False)
+    ref.replay(events)
+    assert state_fingerprint(pipe.results()) == \
+        state_fingerprint(ref.results())
+
+
+def test_ingest_reads_no_grate_env_switch():
+    """The ingest path is configured by constructor arguments only: no
+    module under grate_spark/ except the cdc/bench.py harness reads a
+    GRATE_* environment variable."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "grate_spark"
+    readers = sorted(
+        str(p.relative_to(pkg)) for p in pkg.rglob("*.py")
+        if re.search(r"GRATE_\w+", p.read_text(encoding="utf-8")))
+    assert readers == [os.path.join("cdc", "bench.py")]
 
 
 def test_typed_column_rejects_unknown_target(spark):
@@ -1091,7 +1222,7 @@ def test_incremental_compaction_rewrites_only_chosen_buckets(spark, tmp_path):
 def test_replay_auto_compaction_is_incremental(spark, tmp_path):
     """The replay loop's marker-growth trigger compacts only the
     marker-dense buckets and preserves the replayed state."""
-    events = fixture_events(spark)
+    events = fixture_events(spark, fixture_blobs())
     pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=8,
                        wide_view=False)
     # force the trigger on every replay: any marker file fires it
@@ -1839,7 +1970,7 @@ def test_wide_view_survives_rebucket(spark, tmp_path):
 
     root = str(tmp_path / "lake")
     pipe = CdcPipeline(spark, root, n_buckets=4, wide_view=True)
-    events = fixture_events(spark)
+    events = fixture_events(spark, fixture_blobs())
     n = events.count()
     pipe.replay(events, batch_size=max(2, n // 2), max_batches=1)
 
@@ -2092,19 +2223,32 @@ def test_py_xxhash64_bit_parity_with_jvm(spark):
                            200])
         return "".join(random.choice(pool) for _ in range(n))
 
-    rows = [(rnd_str(), rnd_str(), random.randint(-2 ** 62, 2 ** 62))
+    rows = [(rnd_str(), rnd_str(), random.randint(-2 ** 62, 2 ** 62),
+             random.randint(-2 ** 31, 2 ** 31 - 1),
+             random.randint(-2 ** 15, 2 ** 15 - 1),
+             random.randint(-2 ** 7, 2 ** 7 - 1))
             for _ in range(400)]
-    df = spark.createDataFrame(rows, "a string, b string, c long")
+    df = spark.createDataFrame(rows, "a string, b string, c long, "
+                                     "i int, s smallint, t tinyint")
     got = df.select(F.xxhash64("a").alias("h1"),
                     F.xxhash64("a", "b").alias("h2"),
                     F.xxhash64("c").alias("h3"),
-                    F.xxhash64("a", "b", "c").alias("h4")).collect()
-    for (a, b, c), r in zip(rows, got):
+                    F.xxhash64("a", "b", "c").alias("h4"),
+                    F.xxhash64("i").alias("h5"),
+                    F.xxhash64("s").alias("h6"),
+                    F.xxhash64("t").alias("h7"),
+                    F.xxhash64("a", "i", "s", "t").alias("h8")).collect()
+    for (a, b, c, i, s_, t), r in zip(rows, got):
         assert py_xxhash64([a], ["string"]) == r["h1"]
         assert py_xxhash64([a, b], ["string", "string"]) == r["h2"]
         assert py_xxhash64([c], ["bigint"]) == r["h3"]
         assert py_xxhash64([a, b, c],
                            ["string", "string", "bigint"]) == r["h4"]
+        assert py_xxhash64([i], ["int"]) == r["h5"]
+        assert py_xxhash64([s_], ["smallint"]) == r["h6"]
+        assert py_xxhash64([t], ["tinyint"]) == r["h7"]
+        assert py_xxhash64([a, i, s_, t], ["string", "int", "smallint",
+                                           "tinyint"]) == r["h8"]
     # unsupported type / null -> None (caller falls back to the JVM)
     assert py_xxhash64([None], ["string"]) is None
     assert py_xxhash64([1.5], ["double"]) is None
@@ -2133,3 +2277,18 @@ def test_read_key_routes_without_spark_job(spark, tmp_path):
     got = plan.collect()
     assert [(r["repo"], r["path"], r["v"]) for r in got] == \
         [("r7", "p7", 7)]
+
+
+def test_read_key_int_keyed_table(spark, tmp_path):
+    """A point lookup on an int-keyed table routes to the bucket the
+    writer used (Spark hashes int keys with the 4-byte hashInt) and
+    returns the row."""
+    cat = LakeCatalog(spark, str(tmp_path / "lake"))
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(40)],
+                               "id int, v string")
+    txn = cat.begin()
+    txn.merge_replace_keys("t", df, df.select("id"), ("id",), n_buckets=8)
+    txn.commit()
+    for i in (0, 7, 23, 39):
+        got = cat.read_key("t", {"id": i}).collect()
+        assert [(r["id"], r["v"]) for r in got] == [(i, f"v{i}")]

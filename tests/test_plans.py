@@ -138,9 +138,10 @@ def test_dedup_reuses_signature_exchange(spark):
 
 
 def test_bucket_blobs_fuses_extract_into_write(spark):
-    """bucket_blobs plan shape: the ONLY exchange is of blobs, below the
-    extraction UDF — extracted rows flow to the writer with no second
-    shuffle (the barrier-free extract->encode fuse)."""
+    """The replay's exchange plan: the ONLY exchange is of blobs
+    clustered on the merge bucket, below the extraction UDF — extracted
+    rows flow to the writer with no second shuffle (the barrier-free
+    extract->encode fuse)."""
     from pyspark.sql import functions as F
     from grate_spark.cdc.events import doc_csv_blobs
     from grate_spark.cdc.lake import _bucket_expr
