@@ -10,7 +10,9 @@ Per micro-batch (SURVEY §3.4 lifecycle; north rule semantics):
    the scan, never inside the UDF.
 3. **latest-offset-wins per key** (G1): the window runs over KEY
    COLUMNS only (repo, path, offset, op); a path updated 10^6 times in
-   a batch extracts once. Blob payloads never enter the window.
+   a batch extracts once. Blob payloads never enter the window. A
+   batch in which no key repeats (the stats rollup counts distinct
+   keys) is its own winner set and skips the window.
 4. **winner selection without a blob shuffle**: the winning keys
    broadcast back onto the scan as a semi-join, so extraction reads
    blobs straight off the source splits (scan-partition parallelism);
@@ -46,16 +48,48 @@ METRICS_TABLE = "ingest_metrics"
 
 MERGE_KEY = ("repo", "path")
 
+# the upper offset bound of a batch whose end is the log's high
+# watermark before that watermark is known
+_NO_HI = 2 ** 63 - 1
+
 
 def _batch_rows(events: DataFrame, lo: int, hi: int) -> DataFrame:
-    """Steps 1-2 above: the tabular events with lo < offset <= hi."""
+    """Steps 1-2 above: the events with lo < offset <= hi, flagged
+    ``_tab`` when the path is a tabular artifact. A non-tabular row
+    keeps its keys (its offset still counts toward the watermark) but
+    not its payload."""
+    tab = F.col("path").rlike(TABULAR_SUFFIX_RE)
     return (events
             .filter((F.col("offset") > lo) & (F.col("offset") <= hi))
-            .filter(F.col("path").rlike(TABULAR_SUFFIX_RE)))
+            .withColumn("_tab", tab)
+            .withColumn("content", F.when(tab, F.col("content"))))
+
+
+def _task_slots(n_sub: dict[int, int], bexpr) -> tuple[int, object]:
+    """(task count, task-id column) for the blob exchange: bucket ``b``
+    owns the ``n_sub[b]`` consecutive tasks from ``first[b]``, and a
+    sub-split bucket spreads its paths over them by path hash. The
+    task is assigned directly, not hashed: hashing the (bucket, salt)
+    pairs onto as many partitions collides (8 salts of one hot bucket
+    land in ~5 of 8 partitions, one task carrying 2-3 shares)."""
+    first, k = {}, 0
+    for b in sorted(n_sub):
+        first[b] = k
+        k += n_sub[b]
+
+    def lookup(d: dict[int, int]):
+        return F.try_element_at(
+            F.create_map(*[x for b, v in d.items()
+                           for x in (F.lit(b), F.lit(v))]), bexpr)
+
+    slot = lookup(first)
+    if any(s > 1 for s in n_sub.values()):
+        slot = slot + F.pmod(F.xxhash64(F.col("path")), lookup(n_sub))
+    return max(1, k), slot.cast("int")
 
 
 def _discard_prefetch(future) -> None:
-    """Release the winners cache of a prefetch nobody will use. A
+    """Release the row cache of a prefetch nobody will use. A
     prefetch that raised is dropped the same way: its range is either
     never applied or recomputed by ``apply_batch``."""
     try:
@@ -198,65 +232,59 @@ class CdcPipeline:
 
     # -- one micro-batch -------------------------------------------------------
 
-    def _precompute_from_batch(self, batch: DataFrame) -> tuple:
-        """The two read-only jobs a batch needs before its merge — the
-        latest-wins winner set (cached) and the grouping-sets stats
-        rollup — computed from the immutable event log alone, so the
-        replay loop can run them for batch i+1 CONCURRENTLY with batch
-        i's merge (guide §2.6: overlap independent jobs; the stats
-        tasks back-fill the cores the merge's tail leaves idle).
-        Returns (winners_df_cached, rolled_rows)."""
-        w = Window.partitionBy("repo", "path").orderBy(F.desc("offset"))
-        winners = (batch.select("repo", "path", "offset", "op")
-                   .withColumn("_rn", F.row_number().over(w))
-                   .filter(F.col("_rn") == 1).drop("_rn"))
-        winners.cache()
-        # NOTE deliberately NOT materialized here: an eager count in
-        # the prefetch thread grabs a full task wave ahead of the
-        # running merge under FIFO scheduling and measured ~15% SLOWER
-        # end-to-end; the lazy cache materializes in the merge's
-        # broadcast build instead
-        rolled = (batch.withColumn(
+    def _precompute_from_batch(self, rows: DataFrame) -> tuple:
+        """The read-only job a batch needs before its merge: ONE scan
+        of its ``_batch_rows``, cached, and their grouping-sets stats
+        rollup. The merge takes the winner set and the blobs from the
+        same cache, so the event log is read once per batch. Computed
+        from the immutable event log alone, so the replay loop can run
+        it for batch i+1 CONCURRENTLY with batch i's merge (guide §2.6:
+        overlap independent jobs; the stats tasks back-fill the cores
+        the merge's tail leaves idle).
+        Returns (rows_df_cached, rolled_rows)."""
+        rows.cache()
+        rolled = (rows.withColumn(
             "_b", _bucket_expr(MERGE_KEY, self.n_buckets))
-            .groupingSets([["partition"], ["_b"], []],
-                          "partition", "_b")
+            .groupingSets([["_tab", "partition"], ["_tab", "_b"],
+                           ["_tab"]], "_tab", "partition", "_b")
             .agg(F.count("*").alias("n"),
                  F.countDistinct("offset").alias("n_offsets"),
+                 F.countDistinct(F.xxhash64(*MERGE_KEY)).alias("n_keys"),
                  F.min("offset").alias("min_offset"),
                  F.max("offset").alias("max_offset"),
                  F.grouping("partition").alias("_gp"),
                  F.grouping("_b").alias("_gb"))
             .collect())
-        return winners, rolled
+        return rows, rolled
 
     def apply_batch(self, events: DataFrame, lo: int, hi: int,
                     batch_id: int, prefetched: tuple | None = None) -> dict:
         """Apply events with lo < offset <= hi in one lake commit.
         Returns batch metrics; ``committed`` is False when the range
         holds no tabular event (nothing is written then)."""
-        batch = _batch_rows(events, lo, hi)
-        # latest-offset-wins per file key within the batch, computed on
-        # KEY COLUMNS ONLY (repo, path, offset, op) — never the blob
-        # payload. The winners set is one row per distinct key: small,
-        # cacheable, broadcastable. The grouping sets
-        # {(partition), (_b), ()} yield all three stat levels in ONE
-        # action: (partition) -> per-partition lineage, (_b) ->
-        # per-bucket event counts (touched set + the salt plan's skew
-        # signal), () -> the GLOBAL countDistinct(offset) that catches
-        # a duplicate offset redelivered under TWO different
-        # `partition` values. Both jobs read only the immutable event
-        # log, so the replay loop PREFETCHES them for batch i+1 while
-        # batch i's merge runs (``prefetched``).
+        # The grouping sets {(partition), (_b), ()}, each split by the
+        # tabular flag, yield all three stat levels in ONE action:
+        # (partition) -> per-partition lineage, (_b) -> per-bucket
+        # event counts (touched set + the salt plan's skew signal),
+        # () -> the GLOBAL countDistinct(offset) that catches a
+        # duplicate offset redelivered under TWO different `partition`
+        # values, and countDistinct over the key hash that tells
+        # whether any key repeats. The scan reads only the immutable
+        # event log, so the replay loop PREFETCHES it for batch i+1
+        # while batch i's merge runs (``prefetched``).
         if prefetched is not None:
-            winners, rolled = prefetched
+            rows, rolled = prefetched
         else:
-            winners, rolled = self._precompute_from_batch(batch)
+            rows, rolled = self._precompute_from_batch(
+                _batch_rows(events, lo, hi))
+        winners = None
         try:
             # grouping sets over ZERO input rows yield ZERO output rows
             # (not a single all-null total row), so an empty batch —
             # e.g. a range containing only non-tabular paths — must
             # short-circuit here; the caller advances the checkpoint
             # via its committed:False branch
+            rolled = [r for r in rolled if r["_tab"]]
             total = next((r for r in rolled
                           if r["_gp"] == 1 and r["_gb"] == 1), None)
             if total is None:
@@ -280,15 +308,38 @@ class CdcPipeline:
                            "max_offset": r["max_offset"]}
                           for r in part_rows]
 
-            win_iu = winners.filter(F.col("op") != "D") \
+            batch = rows.filter(F.col("_tab")).drop("_tab")
+            if total["n_keys"] == n_events and not has_dup_offsets:
+                # no key repeats (a key-hash collision only lands a
+                # batch in the branch below): every event is its key's
+                # latest, so the batch is its own winner set
+                keyed = batch
+            else:
+                # latest-offset-wins per file key, computed on KEY
+                # COLUMNS ONLY (repo, path, offset, op) — never the blob
+                # payload. The winners set is one row per distinct key:
+                # small, cacheable, broadcastable. NOTE deliberately NOT
+                # materialized here: the lazy cache fills in the
+                # merge's broadcast build
+                w = Window.partitionBy("repo", "path") \
+                    .orderBy(F.desc("offset"))
+                winners = (batch.select("repo", "path", "offset", "op")
+                           .withColumn("_rn", F.row_number().over(w))
+                           .filter(F.col("_rn") == 1).drop("_rn"))
+                winners.cache()
+                keyed = winners
+            win_iu = keyed.filter(F.col("op") != "D") \
                 .select("repo", "path", "offset")
-            if n_events <= self.broadcast_winners_max \
+            if winners is None:
+                blobs = (batch.filter(F.col("op") != "D")
+                         .select("repo", "path", "commit", "lang",
+                                 "content", "offset"))
+            elif n_events <= self.broadcast_winners_max \
                     and not has_dup_offsets:
                 # broadcast semi-join selects the winning blob rows
-                # straight off the scan: NO shuffle of blob payloads at
-                # all — extraction parallelism is the scan's split
-                # count, and the only shuffle in the whole batch is the
-                # (small) extracted-row bucket exchange in the merge.
+                # straight off the cached batch: blob payloads never
+                # enter the window, and their only shuffle is the
+                # bucket exchange below.
                 blobs = (batch.filter(F.col("op") != "D")
                          .join(F.broadcast(win_iu),
                                ["repo", "path", "offset"])
@@ -332,18 +383,10 @@ class CdcPipeline:
                     blobs.withColumn("src_offset", F.col("offset")),
                     keep=("src_offset",)).withColumn("_bucket", bexpr)
             n_sub = self._salt_plan(bucket_counts, n_events) \
-                if self.salt_buckets else {}
-            if any(s > 1 for s in n_sub.values()):
-                pairs = [x for b, s in n_sub.items() if s > 1
-                         for x in (F.lit(b), F.lit(s))]
-                mod = F.coalesce(
-                    F.element_at(F.create_map(*pairs), bexpr), F.lit(1))
-                salt = F.pmod(F.xxhash64(F.col("path")), mod)
-                blobs = blobs.repartition(sum(n_sub.values()), bexpr, salt)
-            else:
-                blobs = blobs.repartition(max(1, len(touched)), bexpr)
+                if self.salt_buckets else {b: 1 for b in touched}
+            blobs = blobs.repartitionById(*_task_slots(n_sub, bexpr))
             txn = self.lake.begin()
-            all_keys = winners.select("repo", "path")
+            all_keys = keyed.select("repo", "path")
             if self.python_encode:
                 # ONE heavy job, arrow-native: each task extracts its
                 # blobs AND encodes parquet with pyarrow inside the
@@ -461,7 +504,9 @@ class CdcPipeline:
                     "n_rows": n_rows, "n_error_rows": n_error_rows,
                     "committed": True, "lo": lo, "hi": hi}
         finally:
-            winners.unpersist()
+            if winners is not None:
+                winners.unpersist()
+            rows.unpersist()
 
     def _advance_checkpoint(self, batch_id: int, lo: int, hi: int) -> None:
         """Commit the offset watermark alone, for a range that held no
@@ -524,14 +569,15 @@ class CdcPipeline:
         thousands of tiny marker unions."""
         # batch [lo, hi] ranges are pure arithmetic over (checkpoint,
         # batch_size, hwm) — the checkpoint advances to hi whether or
-        # not a batch commits rows — so each batch's read-only jobs
-        # (winners window + stats rollup over the immutable log) can be
+        # not a batch commits rows — so each batch's read-only job
+        # (the cached scan + stats rollup of the immutable log) can be
         # PREFETCHED on a driver thread while the previous batch's
         # merge (or, for batch 1, the hwm scan) runs: their tasks
         # back-fill the cores the merge's straggler tail leaves idle
         # (guide §2.6). A prefetched hi past the hwm selects exactly
         # the (lo, hwm] rows, so the optimistic first guess also
-        # covers a final short batch.
+        # covers a final short batch, and a single batch
+        # (batch_size=None) is prefetched up to _NO_HI.
         self._sync_bucket_spec()
         ckpt0 = int(self.lake.checkpoint().get("global", 0))
         pool = ThreadPoolExecutor(max_workers=1,
@@ -543,12 +589,20 @@ class CdcPipeline:
                     _batch_rows(events, lo, hi))))
 
         pending = None  # (lo, hi, future)
-        if batch_size is not None and (max_batches is None
-                                       or max_batches > 0):
-            pending = prefetch(ckpt0, ckpt0 + batch_size)
-        hwm = events.agg(F.max("offset").alias("h")).collect()[0]["h"] or 0
+        if max_batches is None or max_batches > 0:
+            pending = prefetch(ckpt0, ckpt0 + batch_size
+                               if batch_size is not None else _NO_HI)
         results = []
         try:
+            if batch_size is None and pending is not None:
+                # the open-ended first range IS the tail past the
+                # checkpoint: its rollup carries the hwm, no second scan
+                hwm = max([ckpt0] + [r["max_offset"]
+                                     for r in pending[2].result()[1]
+                                     if r["_gp"] == 1 and r["_gb"] == 1])
+            else:
+                hwm = events.agg(F.max("offset").alias("h")) \
+                    .collect()[0]["h"] or 0
             while True:
                 ckpt = int(self.lake.checkpoint().get("global", 0))
                 if ckpt >= hwm:

@@ -997,6 +997,34 @@ def test_salt_plan_uniform_batches_unchanged(spark):
     assert plan[1] == 1 and plan[2] == 1
 
 
+def test_task_slots_give_each_sub_split_its_own_task(spark):
+    """The blob exchange places every (bucket, sub-split) in a task of
+    its own: a hot bucket split 8 ways fills all 8 tasks, and unsplit
+    buckets never share one."""
+    from grate_spark.cdc.pipeline import _task_slots
+
+    df = spark.createDataFrame(
+        [(b, f"f{i:04d}.csv") for b, n in ((0, 256), (3, 5), (9, 5))
+         for i in range(n)], "b int, path string")
+    k, slot = _task_slots({0: 8, 3: 1, 9: 1}, F.col("b"))
+    assert k == 10
+    got = (df.repartitionById(k, slot)
+           .groupBy(F.spark_partition_id().alias("task"))
+           .agg(F.collect_set("b").alias("bs"), F.count("*").alias("n"))
+           .collect())
+    assert len(got) == 10
+    assert all(len(r["bs"]) == 1 for r in got)
+    hot = sorted(r["n"] for r in got if r["bs"] == [0])
+    assert len(hot) == 8 and sum(hot) == 256
+    k, slot = _task_slots({b: 1 for b in range(6)}, F.col("b"))
+    got = (spark.range(60).select((F.col("id") % 6).cast("int").alias("b"),
+                                  F.lit("p").alias("path"))
+           .repartitionById(k, slot)
+           .groupBy(F.spark_partition_id().alias("task"))
+           .agg(F.countDistinct("b").alias("nb")).collect())
+    assert len(got) == 6 and all(r["nb"] == 1 for r in got)
+
+
 def test_fixture_replay_matches_direct_extraction(spark, tmp_path):
     """Replaying the fixture log with either writer lands exactly the
     rows that direct extraction of the log's final blobs yields (the
