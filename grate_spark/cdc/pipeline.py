@@ -10,12 +10,11 @@ Per micro-batch (SURVEY §3.4 lifecycle; north rule semantics):
    the scan, never inside the UDF.
 3. **latest-offset-wins per key** (G1): the window runs over KEY
    COLUMNS only (repo, path, offset, op); a path updated 10^6 times in
-   a batch extracts once. Blob payloads never enter the window. A
-   batch in which no key repeats (the stats rollup counts distinct
-   keys) is its own winner set and skips the window.
-4. **winner selection without a blob shuffle**: the winning keys
-   broadcast back onto the scan as a semi-join, so extraction reads
-   blobs straight off the source splits (scan-partition parallelism);
+   a batch extracts once. Blob payloads never enter the window.
+4. **winner selection without a blob shuffle**: the batch's rows are
+   read from the log once and cached; the winning keys broadcast back
+   onto them as a semi-join, so blobs meet no shuffle before the
+   bucket exchange;
    batches whose winner set exceeds the broadcast budget fall back to
    one co-partitioned full-row window shuffle.
 5. **extract UDTF** (mapInPandas) over winning I/U blobs; corrupt blobs
@@ -47,10 +46,6 @@ WIDE_TABLE = "results_wide"
 METRICS_TABLE = "ingest_metrics"
 
 MERGE_KEY = ("repo", "path")
-
-# the upper offset bound of a batch whose end is the log's high
-# watermark before that watermark is known
-_NO_HI = 2 ** 63 - 1
 
 
 def _batch_rows(events: DataFrame, lo: int, hi: int) -> DataFrame:
@@ -89,7 +84,7 @@ def _task_slots(n_sub: dict[int, int], bexpr) -> tuple[int, object]:
 
 
 def _discard_prefetch(future) -> None:
-    """Release the row cache of a prefetch nobody will use. A
+    """Release the batch cache of a prefetch nobody will use. A
     prefetch that raised is dropped the same way: its range is either
     never applied or recomputed by ``apply_batch``."""
     try:
@@ -230,9 +225,30 @@ class CdcPipeline:
         return {b: min(par, max(1, math.ceil(cnt / share)))
                 for b, cnt in bucket_counts.items()}
 
+    def _bucket_exchange(self, blobs: DataFrame,
+                         bucket_counts: dict[int, int],
+                         n_events: int) -> DataFrame:
+        """The batch's one blob exchange, clustering blobs on the merge
+        bucket BEFORE extraction, so the extracted rows are born
+        bucket-partitioned and the MoR write needs no exchange of its
+        own: extraction and the parquet encode fuse into ONE stage (no
+        barrier, no row shuffle, one bucket per task; ~20% faster than
+        exchanging the extracted rows at local[8], interleaved A/B on
+        a 15k-file xlsx batch). Base grain is one task per touched
+        bucket; buckets whose event count exceeds an even per-core
+        share are SUB-SPLIT with a per-bucket path salt, so a skewed
+        batch (one hot repo -> one bucket) no longer serializes
+        extraction+write behind a single task. partitionBy("_bucket")
+        still yields one file per bucket PER TASK, so a salted bucket
+        lands as n_sub files — the manifest already supports that."""
+        n_sub = self._salt_plan(bucket_counts, n_events) \
+            if self.salt_buckets else {b: 1 for b in bucket_counts}
+        return blobs.repartitionById(*_task_slots(
+            n_sub, _bucket_expr(MERGE_KEY, self.n_buckets)))
+
     # -- one micro-batch -------------------------------------------------------
 
-    def _precompute_from_batch(self, rows: DataFrame) -> tuple:
+    def _precompute_from_batch(self, batch: DataFrame) -> tuple:
         """The read-only job a batch needs before its merge: ONE scan
         of its ``_batch_rows``, cached, and their grouping-sets stats
         rollup. The merge takes the winner set and the blobs from the
@@ -241,21 +257,20 @@ class CdcPipeline:
         it for batch i+1 CONCURRENTLY with batch i's merge (guide §2.6:
         overlap independent jobs; the stats tasks back-fill the cores
         the merge's tail leaves idle).
-        Returns (rows_df_cached, rolled_rows)."""
-        rows.cache()
-        rolled = (rows.withColumn(
+        Returns (batch_df_cached, rolled_rows)."""
+        batch.cache()
+        rolled = (batch.withColumn(
             "_b", _bucket_expr(MERGE_KEY, self.n_buckets))
             .groupingSets([["_tab", "partition"], ["_tab", "_b"],
                            ["_tab"]], "_tab", "partition", "_b")
             .agg(F.count("*").alias("n"),
                  F.countDistinct("offset").alias("n_offsets"),
-                 F.countDistinct(F.xxhash64(*MERGE_KEY)).alias("n_keys"),
                  F.min("offset").alias("min_offset"),
                  F.max("offset").alias("max_offset"),
                  F.grouping("partition").alias("_gp"),
                  F.grouping("_b").alias("_gb"))
             .collect())
-        return rows, rolled
+        return batch, rolled
 
     def apply_batch(self, events: DataFrame, lo: int, hi: int,
                     batch_id: int, prefetched: tuple | None = None) -> dict:
@@ -268,16 +283,25 @@ class CdcPipeline:
         # event counts (touched set + the salt plan's skew signal),
         # () -> the GLOBAL countDistinct(offset) that catches a
         # duplicate offset redelivered under TWO different `partition`
-        # values, and countDistinct over the key hash that tells
-        # whether any key repeats. The scan reads only the immutable
-        # event log, so the replay loop PREFETCHES it for batch i+1
-        # while batch i's merge runs (``prefetched``).
+        # values. The scan reads only the immutable event log, so the
+        # replay loop PREFETCHES it for batch i+1 while batch i's merge
+        # runs (``prefetched``).
         if prefetched is not None:
-            rows, rolled = prefetched
+            cached, rolled = prefetched
         else:
-            rows, rolled = self._precompute_from_batch(
+            cached, rolled = self._precompute_from_batch(
                 _batch_rows(events, lo, hi))
-        winners = None
+        batch = cached.filter(F.col("_tab")).drop("_tab")
+        # latest-offset-wins per file key within the batch, computed on
+        # KEY COLUMNS ONLY (repo, path, offset, op) — never the blob
+        # payload. The winners set is one row per distinct key: small,
+        # cacheable, broadcastable. NOTE deliberately NOT materialized
+        # here: the lazy cache fills in the merge's broadcast build
+        w = Window.partitionBy("repo", "path").orderBy(F.desc("offset"))
+        winners = (batch.select("repo", "path", "offset", "op")
+                   .withColumn("_rn", F.row_number().over(w))
+                   .filter(F.col("_rn") == 1).drop("_rn"))
+        winners.cache()
         try:
             # grouping sets over ZERO input rows yield ZERO output rows
             # (not a single all-null total row), so an empty batch —
@@ -308,33 +332,9 @@ class CdcPipeline:
                            "max_offset": r["max_offset"]}
                           for r in part_rows]
 
-            batch = rows.filter(F.col("_tab")).drop("_tab")
-            if total["n_keys"] == n_events and not has_dup_offsets:
-                # no key repeats (a key-hash collision only lands a
-                # batch in the branch below): every event is its key's
-                # latest, so the batch is its own winner set
-                keyed = batch
-            else:
-                # latest-offset-wins per file key, computed on KEY
-                # COLUMNS ONLY (repo, path, offset, op) — never the blob
-                # payload. The winners set is one row per distinct key:
-                # small, cacheable, broadcastable. NOTE deliberately NOT
-                # materialized here: the lazy cache fills in the
-                # merge's broadcast build
-                w = Window.partitionBy("repo", "path") \
-                    .orderBy(F.desc("offset"))
-                winners = (batch.select("repo", "path", "offset", "op")
-                           .withColumn("_rn", F.row_number().over(w))
-                           .filter(F.col("_rn") == 1).drop("_rn"))
-                winners.cache()
-                keyed = winners
-            win_iu = keyed.filter(F.col("op") != "D") \
+            win_iu = winners.filter(F.col("op") != "D") \
                 .select("repo", "path", "offset")
-            if winners is None:
-                blobs = (batch.filter(F.col("op") != "D")
-                         .select("repo", "path", "commit", "lang",
-                                 "content", "offset"))
-            elif n_events <= self.broadcast_winners_max \
+            if n_events <= self.broadcast_winners_max \
                     and not has_dup_offsets:
                 # broadcast semi-join selects the winning blob rows
                 # straight off the cached batch: blob payloads never
@@ -358,21 +358,6 @@ class CdcPipeline:
                     .drop("_rn"))
                 blobs = latest.select("repo", "path", "commit", "lang",
                                       "content", "offset")
-            # cluster blobs on the merge bucket BEFORE extraction, so
-            # the extracted rows are born bucket-partitioned and the MoR
-            # write needs no exchange of its own: extraction and the
-            # parquet encode fuse into ONE stage (no barrier, no row
-            # shuffle, one bucket per task; ~20% faster than exchanging
-            # the extracted rows at local[8], interleaved A/B on a
-            # 15k-file xlsx batch). Base grain is one task per
-            # touched bucket; buckets whose event count exceeds an even
-            # per-core share are SUB-SPLIT with a per-bucket path salt,
-            # so a skewed batch (one hot repo -> one bucket) no longer
-            # serializes extraction+write behind a single task.
-            # partitionBy("_bucket") still yields one file per bucket
-            # PER TASK, so a salted bucket lands as n_sub files — the
-            # manifest already supports that.
-            bexpr = _bucket_expr(MERGE_KEY, self.n_buckets)
             if self.python_encode:
                 # arrow-native fused writer: attach lineage + the
                 # JVM-computed bucket BEFORE the exchange, and unwrap
@@ -381,12 +366,11 @@ class CdcPipeline:
                 from ..operators.extraction import unwrap_content
                 blobs = unwrap_content(
                     blobs.withColumn("src_offset", F.col("offset")),
-                    keep=("src_offset",)).withColumn("_bucket", bexpr)
-            n_sub = self._salt_plan(bucket_counts, n_events) \
-                if self.salt_buckets else {b: 1 for b in touched}
-            blobs = blobs.repartitionById(*_task_slots(n_sub, bexpr))
+                    keep=("src_offset",)).withColumn(
+                    "_bucket", _bucket_expr(MERGE_KEY, self.n_buckets))
+            blobs = self._bucket_exchange(blobs, bucket_counts, n_events)
             txn = self.lake.begin()
-            all_keys = keyed.select("repo", "path")
+            all_keys = winners.select("repo", "path")
             if self.python_encode:
                 # ONE heavy job, arrow-native: each task extracts its
                 # blobs AND encodes parquet with pyarrow inside the
@@ -504,9 +488,8 @@ class CdcPipeline:
                     "n_rows": n_rows, "n_error_rows": n_error_rows,
                     "committed": True, "lo": lo, "hi": hi}
         finally:
-            if winners is not None:
-                winners.unpersist()
-            rows.unpersist()
+            winners.unpersist()
+            cached.unpersist()
 
     def _advance_checkpoint(self, batch_id: int, lo: int, hi: int) -> None:
         """Commit the offset watermark alone, for a range that held no
@@ -576,10 +559,12 @@ class CdcPipeline:
         # back-fill the cores the merge's straggler tail leaves idle
         # (guide §2.6). A prefetched hi past the hwm selects exactly
         # the (lo, hwm] rows, so the optimistic first guess also
-        # covers a final short batch, and a single batch
-        # (batch_size=None) is prefetched up to _NO_HI.
+        # covers a final short batch. A single batch (batch_size=None)
+        # is a step past any offset: its prefetched range is the whole
+        # tail, so its rollup also gives the hwm.
         self._sync_bucket_spec()
         ckpt0 = int(self.lake.checkpoint().get("global", 0))
+        step = batch_size if batch_size is not None else 2 ** 62
         pool = ThreadPoolExecutor(max_workers=1,
                                   thread_name_prefix="cdc-prefetch")
 
@@ -590,13 +575,15 @@ class CdcPipeline:
 
         pending = None  # (lo, hi, future)
         if max_batches is None or max_batches > 0:
-            pending = prefetch(ckpt0, ckpt0 + batch_size
-                               if batch_size is not None else _NO_HI)
+            pending = prefetch(ckpt0, ckpt0 + step)
         results = []
         try:
             if batch_size is None and pending is not None:
-                # the open-ended first range IS the tail past the
-                # checkpoint: its rollup carries the hwm, no second scan
+                # the prefetched range is the whole tail: its rollup
+                # carries the hwm, one scan of the log less per
+                # single-batch replay (scripts/submit_replay.py's
+                # default; ~0.9 s of a ~6.5 s salted replay of the salt
+                # gate's 256-file log at local[8], interleaved A/B)
                 hwm = max([ckpt0] + [r["max_offset"]
                                      for r in pending[2].result()[1]
                                      if r["_gp"] == 1 and r["_gb"] == 1])
@@ -609,8 +596,7 @@ class CdcPipeline:
                     break
                 if max_batches is not None and len(results) >= max_batches:
                     break
-                hi = hwm if batch_size is None \
-                    else min(ckpt + batch_size, hwm)
+                hi = min(ckpt + step, hwm)
                 batch_id = len(self.lake.lineage()) + 1
                 pre = None
                 if pending is not None:
@@ -621,8 +607,7 @@ class CdcPipeline:
                     else:  # resumed elsewhere: discard the prefetch
                         _discard_prefetch(pending[2])
                     pending = None
-                nxt_hi = hwm if batch_size is None \
-                    else min(hi + batch_size, hwm)
+                nxt_hi = min(hi + step, hwm)
                 if hi < nxt_hi and (max_batches is None
                                     or len(results) + 1 < max_batches):
                     pending = prefetch(hi, nxt_hi)

@@ -1077,17 +1077,19 @@ def test_replay_non_tabular_only_range_advances_checkpoint(spark, tmp_path):
     assert pipe.results().filter(F.col("path") == "data.csv").count() == 2
 
 
-def test_replay_releases_winners_cache(spark, tmp_path):
-    """Every batch's cached winner set, prefetched or not, is released
-    by the end of a multi-batch replay: a long-lived session tailing a
-    log must not accumulate CacheManager entries."""
+@pytest.mark.parametrize("python_encode", [True, False])
+def test_replay_releases_winners_cache(spark, tmp_path, python_encode):
+    """Every batch's cached rows and winner set, prefetched or not, are
+    released by the end of a multi-batch replay, with either writer: a
+    long-lived session tailing a log must not accumulate CacheManager
+    entries."""
     def cache_mgr_empty():
         return bool(spark._jsparkSession.sharedState()
                     .cacheManager().isEmpty())
 
     spark.catalog.clearCache()  # deterministic baseline under -p ordering
     pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=4,
-                       wide_view=False)
+                       wide_view=False, python_encode=python_encode)
     stats = pipe.replay(fixture_events(spark, fixture_blobs()),
                         batch_size=3)
     assert len(stats) >= 3

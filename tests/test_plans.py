@@ -137,28 +137,37 @@ def test_dedup_reuses_signature_exchange(spark):
         assert join_op not in plan, plan[:2000]
 
 
-def test_bucket_blobs_fuses_extract_into_write(spark):
-    """The replay's exchange plan: the ONLY exchange is of blobs
-    clustered on the merge bucket, below the extraction UDF — extracted
-    rows flow to the writer with no second shuffle (the barrier-free
-    extract->encode fuse)."""
-    from pyspark.sql import functions as F
+def test_bucket_blobs_fuses_extract_into_write(spark, tmp_path):
+    """The replay's exchange plan: the ONLY exchange is the pipeline's
+    own blob exchange (``CdcPipeline._bucket_exchange``: blobs placed
+    on their bucket's task slot by partition id), below the extraction
+    UDF — extracted rows flow to the writer with no second shuffle
+    (the barrier-free extract->encode fuse). A hot bucket is in the
+    batch so that the salted sub-split is part of the plan."""
     from grate_spark.cdc.events import doc_csv_blobs
     from grate_spark.cdc.lake import _bucket_expr
+    from grate_spark.cdc.pipeline import CdcPipeline
     from grate_spark.operators.extraction import extract_files
 
-    blobs = doc_csv_blobs(spark, SF, version=1) \
-        .repartition(4, _bucket_expr(("repo", "path"), 8))
+    pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=8,
+                       wide_view=False, python_encode=False)
+    counts = {0: 895, **{b: 15 for b in range(1, 8)}}
+    assert pipe._salt_plan(counts, 1000)[0] > 1
+    blobs = pipe._bucket_exchange(doc_csv_blobs(spark, SF, version=1),
+                                  counts, 1000)
     rows = extract_files(blobs).withColumn(
         "_bucket", _bucket_expr(("repo", "path"), 8))
     plan = simple_plan(rows)
     above_udf = plan[:plan.index("MapInPandas")]
     assert "Exchange" not in above_udf, \
         "exchange sits above the extraction UDF (rows reshuffled):\n" + plan
-    # and the blob exchange below it is the bucket one
+    # and the blob exchange right below it is the direct task-slot one
     below_udf = plan[plan.index("MapInPandas"):]
-    assert re.search(r"Exchange hashpartitioning\(cast\(pmod", below_udf), \
-        plan
+    first_exchange = below_udf[below_udf.index("Exchange"):]
+    assert first_exchange.startswith(
+        "Exchange shufflepartitionidpassthrough("
+        "direct_shuffle_partition_id("), plan
+    assert "xxhash64(path" in first_exchange.splitlines()[0], plan
 
 
 def test_spread_preserves_pruning_and_parallelism(spark):
