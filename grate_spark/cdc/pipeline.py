@@ -629,9 +629,9 @@ class CdcPipeline:
                 t = m["tables"].get(tname)
                 if not t:
                     continue
-                entries = [e for fs in t.get("markers", {}).values()
+                entries = [e for fs in t["markers"].values()
                            for e in fs]
-                n_bytes = sum(e.get("bytes", 0) for e in entries)
+                n_bytes = sum(e["bytes"] for e in entries)
                 if (len(entries) > compact_after_markers
                         or n_bytes > compact_after_marker_bytes):
                     # INCREMENTAL: rewrite only the marker-dense buckets

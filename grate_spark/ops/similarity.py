@@ -137,11 +137,13 @@ NEARDUP_SEED_OFFSET = 1_000_000
 
 # SUPERSET prefilter margin for the pair kernel: a pair can only reach
 # round(cos, 4) >= threshold if cos >= threshold - 0.00005, so keeping
-# everything with dot >= 0.9996 * threshold * (nrm_a * nrm_b) (relative
-# margin 4e-4, ten orders of magnitude above the ulp error of the
-# multiplied threshold) provably never drops a result row; the exact
-# JVM-side round(dot / (na * nb), 4) >= threshold then decides.
-NEARDUP_PREFILTER = 0.9996
+# everything with dot >= (threshold - 1e-4) * (nrm_a * nrm_b) (absolute
+# margin 5e-5 past the rounding bound, far above the ulp error of the
+# product) never drops a result row at any threshold, negative ones
+# included; the exact JVM-side round(dot / (na * nb), 4) >= threshold
+# then decides. A relative margin (threshold * 0.9996) is too thin for
+# thresholds under 0.125 and on the wrong side for negative ones.
+NEARDUP_PREFILTER_MARGIN = 1e-4
 
 
 def _bucket_pair_kernel(threshold: float, block: int = 2048):
@@ -154,7 +156,7 @@ def _bucket_pair_kernel(threshold: float, block: int = 2048):
     to vectorized native code instead of per-pair JVM expressions).
     Emits only prefilter survivors: (vec_a, vec_b, _dot, _na, _nb).
     Row blocks bound memory to block x bucket_size doubles."""
-    pre = NEARDUP_PREFILTER * threshold
+    pre = threshold - NEARDUP_PREFILTER_MARGIN
 
     def kernel(batches):
         import numpy as np

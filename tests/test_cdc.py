@@ -109,6 +109,77 @@ def test_lake_merge_null_key(spark, tmp_path):
     assert got == [("p1", "r", "x"), ("p2", None, "y"), ("p3", "q", "z")]
 
 
+def test_marker_writer_branches_write_identical_files(spark, tmp_path):
+    """The marker writer's driver-side (pyarrow) and Spark branches
+    write the same file for the same marker set: rows, row order,
+    column names and arrow types, over string, bigint and int keys. A
+    small key set holding a null takes the Spark branch."""
+    import pyarrow.parquet as pq
+
+    cat = LakeCatalog(spark, str(tmp_path / "lake"))
+    t = {"key_cols": ["s", "b", "i"], "schema_id": 0}
+    keys = [("b", 2, 1), ("a", 5, -3), ("é", -1, 0), ("a", 5, -4),
+            ("a", -9, 2), ("Z", 0, 0)]
+    schema = "s string, b bigint, i int"
+    df = spark.createDataFrame(keys, schema)
+    txn = cat.begin()
+
+    def written(entries):
+        assert len(entries) == 1 and entries[0]["bytes"] > 0
+        path = os.path.join(cat.root, entries[0]["path"])
+        return (pq.ParquetFile(path).metadata.created_by,
+                pq.read_table(path))
+
+    # a merge's key set stamped with its seq, through both branches; a
+    # set that carries its own seq column (squash, compaction shrink)
+    by_driver, driver = written(
+        txn._write_markers("t", t, df, approx_keys=len(keys), seq=7))
+    by_spark, on_spark = written(txn._write_markers("t", t, df, seq=7))
+    _by, with_seq = written(txn._write_markers(
+        "t", t, df.withColumn("seq", F.lit(7).cast("long"))))
+    assert "parquet-cpp" in by_driver and "parquet-mr" in by_spark
+    for other in (on_spark, with_seq):
+        assert driver.column_names == other.column_names \
+            == ["s", "b", "i", "seq"]
+        assert driver.schema.types == other.schema.types
+        assert driver.to_pylist() == other.to_pylist()
+    assert [tuple(r.values()) for r in driver.to_pylist()] \
+        == sorted(k + (7,) for k in keys)
+
+    with_null = df.union(spark.createDataFrame([(None, 1, 1)], schema))
+    by, got = written(txn._write_markers("t", t, with_null,
+                                         approx_keys=len(keys) + 1, seq=7))
+    assert "parquet-mr" in by
+    assert got.to_pylist()[0]["s"] is None
+
+
+def test_lake_read_rejects_pre_shard_manifest(spark, tmp_path):
+    """A manifest that lists a bucket's files inline (no ``shards``
+    pointers) is a form no writer produces: reading it raises KeyError
+    instead of returning a table."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "lake"
+    cat = LakeCatalog(spark, str(root))
+    rel = os.path.join("data", "t", "old", "part-0.parquet")
+    os.makedirs(root / "data" / "t" / "old")
+    pq.write_table(pa.table({"k": ["a"], "v": [1]}), str(root / rel))
+    schema = StructType([StructField("k", StringType()),
+                         StructField("v", LongType())])
+    manifest = {"version": 1, "checkpoint": {}, "lineage": [],
+                "tables": {"t": {
+                    "schemas": [schema.json()], "schema_id": 0,
+                    "key_cols": ["k"], "n_buckets": 1, "markers": {},
+                    "files": {"0": [{"path": rel, "schema_id": 0}]}}}}
+    with open(cat._manifest_path(1), "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(KeyError):
+        cat.read("t")
+
+
 def test_lake_schema_evolution_on_merge(spark, tmp_path):
     cat = LakeCatalog(spark, str(tmp_path / "lake"))
     txn = cat.begin()
@@ -288,7 +359,11 @@ def test_python_encode_state_matches_jvm_writer(spark, tmp_path):
 
 def test_lake_compaction_preserves_state(spark, tmp_path):
     """compact() folds MoR markers into data files without changing the
-    visible table state, and clears all markers."""
+    visible table state, and clears all markers. The rewritten files
+    carry the ``_seq`` of the version the compaction began from, and a
+    later merge still supersedes their rows."""
+    import pyarrow.parquet as pq
+
     cat = LakeCatalog(spark, str(tmp_path / "lake"))
     txn = cat.begin()
     base = spark.createDataFrame(
@@ -308,10 +383,27 @@ def test_lake_compaction_preserves_state(spark, tmp_path):
 
     txn3 = cat.begin()
     txn3.compact("t")
-    txn3.commit()
+    v3 = txn3.commit()
     after = sorted((r["path"], r["v"]) for r in cat.read("t").collect())
     assert before == after == [("p1", "X"), ("p2", "z")]
     assert cat.manifest()["tables"]["t"]["markers"] == {}
+    seqs = set()
+    for entries in cat.table_files("t").values():
+        for e in entries:
+            seqs.update(pq.read_table(os.path.join(cat.root, e["path"]),
+                                      columns=["_seq"])
+                        .column("_seq").to_pylist())
+    assert seqs == {v3 - 1}
+
+    txn4 = cat.begin()
+    fix = spark.createDataFrame([("r", "p2", 0, "Z")],
+                                "repo string, path string, row_id int, "
+                                "v string")
+    txn4.merge_replace_keys("t", fix, fix.select("repo", "path"),
+                            ("repo", "path"), n_buckets=4)
+    txn4.commit()
+    assert sorted((r["path"], r["v"]) for r in cat.read("t").collect()) \
+        == [("p1", "X"), ("p2", "Z")]
 
 
 def test_compact_writes_key_sorted_data_files(spark, tmp_path):
@@ -1513,6 +1605,47 @@ def test_rebucket_guards(spark, tmp_path):
                            ("repo", "path"), n_buckets=2)
     with pytest.raises(RuntimeError):
         txn.rebucket("t", 4)
+
+
+@pytest.mark.parametrize("maintenance", ["compact", "compact_buckets",
+                                         "rebucket"])
+def test_merge_after_maintenance_in_one_txn(spark, tmp_path, maintenance):
+    """A merge staged after a compaction or rebucket in the same txn
+    supersedes the rewritten rows: one row per key, the merged value."""
+    from grate_spark.cdc.lake import _bucket_expr
+
+    cat = LakeCatalog(spark, str(tmp_path / "lake"))
+    schema = "repo string, path string, row_id int, v string"
+    for tag in ("a", "b"):
+        df = spark.createDataFrame(
+            [("r", f"p{i}", 0, f"{tag}{i}") for i in range(12)], schema)
+        txn = cat.begin()
+        txn.merge_replace_keys("t", df, df.select("repo", "path"),
+                               ("repo", "path"), n_buckets=4)
+        txn.commit()
+
+    fix = spark.createDataFrame([("r", "p3", 0, "c3"), ("r", "p7", 0, "c7")],
+                                schema)
+    txn = cat.begin()
+    if maintenance == "compact":
+        txn.compact("t")
+    elif maintenance == "rebucket":
+        txn.rebucket("t", 8)
+    else:
+        fixed = {r["b"] for r in fix.select(_bucket_expr(
+            ("repo", "path"), 4).alias("b")).collect()}
+        txn.compact("t", buckets=sorted(fixed))
+    txn.merge_replace_keys("t", fix, fix.select("repo", "path"),
+                           ("repo", "path"), n_buckets=4)
+    txn.commit()
+
+    want = sorted((f"p{i}", {3: "c3", 7: "c7"}.get(i, f"b{i}"))
+                  for i in range(12))
+    assert sorted((r["path"], r["v"]) for r in cat.read("t").collect()) \
+        == want
+    for key in ("p3", "p7"):
+        got = cat.read_key("t", {"repo": "r", "path": key}).collect()
+        assert [r["v"] for r in got] == ["c" + key[1:]]
 
 
 def test_pipeline_follows_manifest_bucket_spec(spark, tmp_path):

@@ -302,3 +302,45 @@ def test_lsh_neardups_releases_candidate_cache(spark):
     # (the sort's local-checkpoint BLOCKS are reclaimed separately by
     # the ContextCleaner — they never pin CacheManager entries)
     assert cache_mgr_empty()
+
+
+@pytest.mark.parametrize("threshold,cos", [(0.05, 0.04996),
+                                           (-0.5, -0.4999)])
+def test_neardup_pairs_prefilter_keeps_boundary_pairs(spark, threshold,
+                                                      cos):
+    """The kernel's prefilter must keep every pair whose rounded cosine
+    reaches the threshold, at small and negative thresholds too: the
+    pair (0, 1) at cosine ``cos`` reaches the threshold (0.04996 rounds
+    to 0.0500; -0.4999 lies just above -0.5) and must be returned.
+    Reference: brute force over all same-centroid pairs (one centroid),
+    with the JVM's fold order and round-half-up to 4 decimals."""
+    import math
+    import random
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from grate_spark.ops.similarity import neardup_pairs
+
+    rnd = random.Random(7)
+    vecs = [[1.0, 0.0, 0.0], [cos, math.sqrt(1 - cos * cos), 0.0]]
+    vecs += [[rnd.uniform(-1, 1) for _ in range(3)] for _ in range(10)]
+    emb = spark.createDataFrame(list(enumerate(vecs)),
+                                "vec_id long, v array<double>")
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    def rounded(a, b):
+        c = fold(a, b) / (math.sqrt(fold(a, a)) * math.sqrt(fold(b, b)))
+        return float(Decimal(repr(c)).quantize(Decimal("0.0001"),
+                                               ROUND_HALF_UP))
+
+    want = sorted((i, j, rounded(vecs[i], vecs[j]))
+                  for i in range(len(vecs)) for j in range(i + 1, len(vecs))
+                  if rounded(vecs[i], vecs[j]) >= threshold)
+    assert (0, 1) in [p[:2] for p in want]
+    got = [(r["vec_a"], r["vec_b"], r["cos"]) for r in
+           neardup_pairs(emb, threshold=threshold, n_centroids=1).collect()]
+    assert got == want
