@@ -23,9 +23,11 @@ data files by manifest rather than by directory listing.
 Input contract: the blob DataFrame must already carry
 ``_bucket`` (computed JVM-side with the lake's xxhash64 bucket
 expression — NOT re-derived in Python, so bucketing stays
-bit-identical to the JVM path) and ``src_offset`` lineage columns,
-and should be repartitioned on the bucket (+salt) so each task sees
-few buckets (the CDC pipeline does both).
+bit-identical to the JVM path) and ``src_offset`` lineage columns.
+A task may hold any mix of buckets: the CDC pipeline packs several
+buckets onto one task, and splits a hot bucket over several, by
+event count. Each task writes one file per bucket it sees, so every
+file is bucket-pure whatever the packing.
 """
 
 from __future__ import annotations
@@ -115,7 +117,8 @@ def row_sha256(cells) -> str:
 
 class _BucketWriter:
     """One parquet file per (task, bucket), streamed in bounded chunks
-    exactly like the JVM writer's Arrow batches."""
+    exactly like the JVM writer's Arrow batches. A task opens one per
+    bucket among its rows, so its files stay bucket-pure."""
 
     def __init__(self, out_full: str, out_rel: str, bucket: int,
                  part_id: int, schema):

@@ -806,6 +806,13 @@ def test_lineage_and_metrics(fixture_replayed):
     for a, b in zip(lin, lin[1:]):
         assert b["lo"] == a["hi"]
     assert any(e["partitions"] for e in lin)
+    # how each committed batch's extract+write stage was packed
+    par = pipe.spark.sparkContext.defaultParallelism
+    committed = [e for e in lin if "n_rows" in e]
+    assert committed
+    for e in committed:
+        assert 1 <= e["tasks"] <= par
+        assert 1 <= e["max_task_events"]
     m = pipe.metrics()
     total_events = m.agg(F.sum("n_events")).collect()[0][0]
     # metrics count tabular events only
@@ -1076,45 +1083,143 @@ def test_salted_hot_bucket_state_and_speedup(spark, tmp_path):
         f"expected >=2x speedup, got {times}")
 
 
-def test_salt_plan_uniform_batches_unchanged(spark):
-    """Uniform batches across >= parallelism buckets keep the old
-    one-task-per-bucket exchange (all sub-split factors 1)."""
-    pipe = CdcPipeline(spark, "/tmp/unused-salt-plan", n_buckets=32)
+def _task_loads(plan, counts):
+    """Events per task of a ``_pack_tasks`` plan, with each bucket's
+    count spread over its sub-splits as the packer does."""
+    loads = {}
+    for bk, ts in plan.items():
+        n, c = len(ts), counts[bk]
+        for i, t in enumerate(ts):
+            loads[t] = loads.get(t, 0) + c // n + (i < c % n)
+    return loads
+
+
+def test_pack_tasks_uniform_batch_bound(spark):
+    """A uniform batch over many buckets splits no bucket and packs
+    them onto at most one task per core by event count, within the
+    list-scheduling bound: heaviest task <= mean load + largest share.
+    A hot bucket is split, at most once per core; with
+    salt_buckets=False nothing ever is. Same counts, same plan."""
+    import random
+
+    pipe = CdcPipeline(spark, "/tmp/unused-pack-tasks", n_buckets=64)
     par = pipe.n_partitions
-    uniform = {b: 10 for b in range(par)}
-    assert set(pipe._salt_plan(uniform, 10 * par).values()) == {1}
+    rnd = random.Random(7)
+    uniform = {bk: rnd.randint(1, 3) for bk in range(0, 128, 3)}
+    n = sum(uniform.values())
+    plan, loads = pipe._pack_tasks(uniform, n)
+    assert all(len(ts) == 1 for ts in plan.values())
+    assert len(loads) == min(len(uniform), par)
+    assert {t for ts in plan.values() for t in ts} == set(range(len(loads)))
+    assert sorted(_task_loads(plan, uniform).values()) == sorted(loads)
+    assert sum(loads) == n
+    assert max(loads) <= n / len(loads) + max(uniform.values())
+    assert pipe._pack_tasks(dict(reversed(uniform.items())), n) \
+        == (plan, loads)
+
     hot = {0: 9_000, 1: 500, 2: 500}
-    plan = pipe._salt_plan(hot, 10_000)
-    assert plan[0] > 1 and plan[0] <= par
-    assert plan[1] == 1 and plan[2] == 1
+    plan, loads = pipe._pack_tasks(hot, 10_000)
+    assert 1 < len(plan[0]) <= par
+    assert len(plan[1]) == 1 and len(plan[2]) == 1
+    assert pipe._pack_tasks(hot, 10_000) == (plan, loads)
+    pipe.salt_buckets = False
+    plan, loads = pipe._pack_tasks(hot, 10_000)
+    assert all(len(ts) == 1 for ts in plan.values())
+    assert len(loads) == min(3, par) and max(loads) == 9_000
 
 
-def test_task_slots_give_each_sub_split_its_own_task(spark):
-    """The blob exchange places every (bucket, sub-split) in a task of
-    its own: a hot bucket split 8 ways fills all 8 tasks, and unsplit
-    buckets never share one."""
-    from grate_spark.cdc.pipeline import _task_slots
+def test_pack_tasks_give_each_sub_split_its_own_task(spark):
+    """The blob exchange places a hot bucket split 8 ways on 8
+    distinct tasks, each holding one sub-split, and a task that holds
+    several buckets keeps each row on its bucket's task."""
+    from grate_spark.cdc.pipeline import _task_id
 
+    pipe = CdcPipeline(spark, "/tmp/unused-pack-tasks", n_buckets=16)
+    pipe.n_partitions = 8
+    counts = {0: 256, 3: 5, 9: 5}
+    plan, loads = pipe._pack_tasks(counts, 266)
+    assert len(loads) == 8 and len(plan[0]) == 8
+    assert len(set(plan[0])) == 8
     df = spark.createDataFrame(
-        [(b, f"f{i:04d}.csv") for b, n in ((0, 256), (3, 5), (9, 5))
+        [(bk, f"f{i:04d}.csv") for bk, n in counts.items()
          for i in range(n)], "b int, path string")
-    k, slot = _task_slots({0: 8, 3: 1, 9: 1}, F.col("b"))
-    assert k == 10
-    got = (df.repartitionById(k, slot)
-           .groupBy(F.spark_partition_id().alias("task"))
-           .agg(F.collect_set("b").alias("bs"), F.count("*").alias("n"))
-           .collect())
-    assert len(got) == 10
-    assert all(len(r["bs"]) == 1 for r in got)
-    hot = sorted(r["n"] for r in got if r["bs"] == [0])
+    got = (df.repartitionById(len(loads), _task_id(plan, F.col("b")))
+           .groupBy(F.spark_partition_id().alias("task"), "b")
+           .agg(F.count("*").alias("n")).collect())
+    hot = sorted(r["n"] for r in got if r["b"] == 0)
     assert len(hot) == 8 and sum(hot) == 256
-    k, slot = _task_slots({b: 1 for b in range(6)}, F.col("b"))
-    got = (spark.range(60).select((F.col("id") % 6).cast("int").alias("b"),
-                                  F.lit("p").alias("path"))
-           .repartitionById(k, slot)
-           .groupBy(F.spark_partition_id().alias("task"))
-           .agg(F.countDistinct("b").alias("nb")).collect())
-    assert len(got) == 6 and all(r["nb"] == 1 for r in got)
+    assert sorted(r["task"] for r in got if r["b"] == 0) == list(range(8))
+    for bk in (3, 9):
+        assert [(r["task"], r["n"]) for r in got if r["b"] == bk] \
+            == [(plan[bk][0], 5)]
+
+
+@pytest.mark.parametrize("python_encode", [True, False])
+def test_packed_tasks_write_bucket_pure_files(spark, tmp_path,
+                                              python_encode):
+    """A batch that touches more buckets than there are cores, one of
+    them hot: packing puts several buckets on one task and splits the
+    hot one over several. Every registered data file of results and
+    results_wide still holds only rows of the bucket it is registered
+    under, and read_key on every key returns the rows that direct
+    extraction of its blob yields."""
+    from urllib.parse import unquote, urlparse
+
+    from grate_spark.cdc.events import EVENT_COLS
+    from grate_spark.cdc.lake import _bucket_expr
+    from grate_spark.cdc.pipeline import (MERGE_KEY, RESULTS_TABLE,
+                                          WIDE_TABLE)
+    from grate_spark.operators.extraction import (extract_files,
+                                                  with_content_sha)
+
+    par = spark.sparkContext.defaultParallelism
+    nb = 2 * par
+    cand = spark.createDataFrame(
+        [(f"r{i % 7}", f"f{i:04d}.csv") for i in range(40 * nb)],
+        "repo string, path string")
+    by_bucket: dict[int, list] = {}
+    for r in cand.select("repo", "path", _bucket_expr(MERGE_KEY, nb)
+                         .alias("b")).collect():
+        by_bucket.setdefault(r["b"], []).append((r["repo"], r["path"]))
+    hot = max(by_bucket, key=lambda b: len(by_bucket[b]))
+    keys = by_bucket[hot][:2 * par] + [
+        ks[0] for b, ks in sorted(by_bucket.items()) if b != hot]
+    events = spark.createDataFrame(
+        [(i + 1, i % 3, "I", repo, path, f"c{i}", "csv",
+          f"a,b\n{i},{repo}\n{i + 1},{path}")
+         for i, (repo, path) in enumerate(keys)], list(EVENT_COLS))
+    pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=nb,
+                       python_encode=python_encode)
+    pipe.replay(events)
+    lin = pipe.lake.lineage()[-1]
+    assert lin["tasks"] <= par < len(lin["buckets"]) == nb
+    assert len(pipe.lake.table_files(RESULTS_TABLE)[str(hot)]) > 1
+
+    for table in (RESULTS_TABLE, WIDE_TABLE):
+        registered = {
+            os.path.join(pipe.lake.root, e["path"]): int(b)
+            for b, es in pipe.lake.table_files(table).items() for e in es}
+        got = (spark.read.parquet(*registered)
+               .select(F.input_file_name().alias("f"),
+                       _bucket_expr(MERGE_KEY, nb).alias("b"))
+               .distinct().collect())
+        assert {unquote(urlparse(r["f"]).path) for r in got} \
+            == set(registered), table
+        for r in got:
+            assert registered[unquote(urlparse(r["f"]).path)] \
+                == r["b"], (table, r)
+
+    cols = ["sheet", "row_id", "cells", "content_sha256", "error"]
+    want: dict[tuple, list] = {}
+    for r in with_content_sha(extract_files(events)).collect():
+        want.setdefault((r["repo"], r["path"]), []).append(
+            tuple(r[c] for c in cols))
+    assert set(want) == set(keys)
+    for (repo, path), rows in want.items():
+        got = pipe.lake.read_key(RESULTS_TABLE,
+                                 {"repo": repo, "path": path}).collect()
+        assert sorted((tuple(r[c] for c in cols) for r in got),
+                      key=repr) == sorted(rows, key=repr), (repo, path)
 
 
 def test_fixture_replay_matches_direct_extraction(spark, tmp_path):

@@ -152,9 +152,10 @@ def test_bucket_blobs_fuses_extract_into_write(spark, tmp_path):
     pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=8,
                        wide_view=False, python_encode=False)
     counts = {0: 895, **{b: 15 for b in range(1, 8)}}
-    assert pipe._salt_plan(counts, 1000)[0] > 1
+    plan, _ = pipe._pack_tasks(counts, 1000)
+    assert len(plan[0]) > 1
     blobs = pipe._bucket_exchange(doc_csv_blobs(spark, SF, version=1),
-                                  counts, 1000)
+                                  plan)
     rows = extract_files(blobs).withColumn(
         "_bucket", _bucket_expr(("repo", "path"), 8))
     plan = simple_plan(rows)
