@@ -39,6 +39,19 @@ cluster deployment):
   pointers, every marker entry carries its ``bytes``, and changelog
   reads walk the per-table change chain. A manifest in any other form
   fails with KeyError rather than reading as an empty table.
+- **the manifest is the file index**: every read scans exactly the
+  files a committed manifest lists, through one helper
+  (``LakeCatalog.scan_files``) that always passes an explicit schema, so
+  Spark infers nothing from footers. Spark still lists the given paths
+  when it builds the relation, and above
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths (32
+  by default) it runs that listing as a distributed job with one task
+  per file: planning latency paid before any task scans data, and most
+  of a full read's time on a tail-sized lake. Since a manifest path is
+  known to exist, that listing is only an existence re-check, so the
+  catalog raises the threshold on its session and the re-check stays
+  serial on the driver. [Iceberg: the scan plans from manifest files,
+  never from a directory listing]
 - **schema evolution**: each file records the schema it was written with;
   reads align every file group to the current table schema (missing
   columns -> NULL, types upcast along int->bigint->double->string). A
@@ -51,8 +64,10 @@ list of touched bucket ids and file names.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import re
 import time
 import uuid
 
@@ -109,6 +124,11 @@ def _schema(t: dict, sid: int | None = None) -> StructType:
         t["schemas"][t["schema_id"] if sid is None else sid]))
 
 
+def _union_all(parts: list[DataFrame]) -> DataFrame:
+    """unionByName over a non-empty list of frames."""
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
 def _align(df: DataFrame, target: StructType,
            extras: tuple[str, ...] = ()) -> DataFrame:
     """Project df onto the target schema: missing cols -> NULL, types
@@ -141,6 +161,12 @@ class LakeCatalog:
         # O(delta) changelog gate asserts on it.
         self._man_cache: dict[int, dict] = {}
         self.manifest_reads = 0
+        # every path scan_files passes comes from a manifest, so it exists:
+        # keep Spark's re-listing of it serial on the driver instead of
+        # a one-task-per-file job (module docstring, "file index")
+        spark.conf.set(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1))
         os.makedirs(os.path.join(root, MANIFEST_DIR), exist_ok=True)
         os.makedirs(os.path.join(root, DATA_DIR), exist_ok=True)
 
@@ -278,6 +304,15 @@ class LakeCatalog:
             raise KeyError(f"lake: no such table {name!r}")
         return list(self._live_entries(t, buckets, key_eq))
 
+    def scan_files(self, schema: StructType,
+                   paths: list[str]) -> DataFrame:
+        """The lake's one parquet read: the absolute ``paths``, all taken
+        from a manifest (committed, or staged by an open transaction),
+        scanned with the explicit ``schema``. Builds the relation without
+        a Spark job: no footer inference, and the listing stays on the
+        driver (see ``__init__``)."""
+        return self.spark.read.schema(schema).parquet(*paths)
+
     def _data_union(self, t: dict, buckets: list[int] | None,
                     current: StructType,
                     key_eq: dict | None = None) -> DataFrame | None:
@@ -294,12 +329,8 @@ class LakeCatalog:
         for sid, paths in sorted(groups.items()):
             fs = StructType(list(_schema(t, sid).fields)
                             + [StructField("_seq", LongType(), True)])
-            parts.append(_align(
-                self.spark.read.schema(fs).parquet(*paths), target))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            parts.append(_align(self.scan_files(fs, paths), target))
+        return _union_all(parts)
 
     def _markers(self, t: dict) -> tuple[DataFrame | None, int]:
         """Union key-marker (tombstone) files: key cols + seq. Markers
@@ -311,12 +342,9 @@ class LakeCatalog:
         entries = [e for fs in t["markers"].values() for e in fs]
         if not entries:
             return None, 0
-        # explicit schema: without it Spark runs a footer-inference job
-        # (1 task) on EVERY marker read — pure planning latency, and
-        # the manifest already pins the key columns and seq type
-        return (self.spark.read.schema(self._marker_schema(t))
-                .parquet(*[os.path.join(self.root, e["path"])
-                           for e in entries]),
+        return (self.scan_files(self._marker_schema(t),
+                                [os.path.join(self.root, e["path"])
+                                 for e in entries]),
                 sum(e["bytes"] for e in entries))
 
     @staticmethod
@@ -498,10 +526,11 @@ class LakeCatalog:
         thousands of commits gets an O(schema-groups) plan, not
         O(commits) union subtrees. The per-op plan stays for small
         windows because it is faster there: on a tail's one-commit poll
-        (60-event batches, 64 buckets, local[4] on a 4-core host, 20
-        interleaved polls per plan) both returned identical rows, the
-        per-op plan in 0.74 s median and the batched one in 1.59 s, so
-        a batched-only plan would double the poll time. (Delete
+        (60-event batches, 64 buckets, 33-34 data files, local[4] on a
+        4-core host, 20 interleaved polls per plan, two seeds) both
+        returned identical rows, the per-op plan in 0.43-0.67 s median
+        and the batched one in 1.21-1.88 s, so a batched-only plan would
+        about triple the poll time. (Delete
         granularity in the batched plan is per-version rather than
         per-op — identical whenever a version holds at most one merge
         of the table, which every writer in this engine guarantees.)
@@ -556,8 +585,8 @@ class LakeCatalog:
             rows = None
             if paths:
                 rows = _align(
-                    self.spark.read.schema(_schema(t_to, o["sid"]))
-                    .parquet(*paths), current)
+                    self.scan_files(_schema(t_to, o["sid"]), paths),
+                    current)
                 parts.append(rows.select(
                     *[F.col(f.name) for f in current.fields],
                     F.lit("upsert" if kind == "merge"
@@ -565,9 +594,7 @@ class LakeCatalog:
                     F.lit(v).cast("long").alias("_commit_version")))
             mpaths = [os.path.join(self.root, p) for p in o["markers"]]
             if kind == "merge" and mpaths:
-                keys = (self.spark.read
-                        .schema(self._marker_schema(t_to))
-                        .parquet(*mpaths)
+                keys = (self.scan_files(self._marker_schema(t_to), mpaths)
                         .select(*key_cols).distinct())
                 if rows is not None:
                     # deletes = touched keys that contributed no new
@@ -588,10 +615,7 @@ class LakeCatalog:
                             .alias("_commit_version")))
         if not parts:
             return self.spark.createDataFrame([], out_schema)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union_all(parts)
 
     # stage-dir capture: every commit op stages its files under ONE
     # unique data/<table>/<12-hex-txnid>-<nnnn>/ directory, so the dir
@@ -626,11 +650,10 @@ class LakeCatalog:
         groups: dict[tuple[str, int], list[str]] = {}
         marker_groups: dict[int, list[str]] = {}
         marker_rows: list[tuple[str, int]] = []
-        import re as _re
         for o in ops:
             dirs = set()
             for p in o["files"]:
-                m = _re.search(self._STAGE_RE, "/" + p)
+                m = re.search(self._STAGE_RE, "/" + p)
                 if not m:
                     return None
                 dirs.add(m.group(1))
@@ -645,7 +668,7 @@ class LakeCatalog:
             if o["kind"] == "merge" and o["markers"]:
                 mdirs = set()
                 for p in o["markers"]:
-                    m = _re.search(self._STAGE_RE, "/" + p)
+                    m = re.search(self._STAGE_RE, "/" + p)
                     if not m:
                         return None
                     mdirs.add(m.group(1))
@@ -670,11 +693,10 @@ class LakeCatalog:
             return (df.withColumn("_stage", stage)
                     .join(F.broadcast(vdf), "_stage").drop("_stage"))
         parts: list[DataFrame] = []
-        rows_keys = None  # (key_cols, _commit_version) of upsert rows
+        rows_keys = []  # (key_cols, _commit_version) of upsert rows
         for (kind, sid), paths in sorted(groups.items()):
             scan = _with_version(
-                self.spark.read.schema(_schema(t_to, sid)).parquet(*paths),
-                ver_rows)
+                self.scan_files(_schema(t_to, sid), paths), ver_rows)
             rows = _align(scan, current, extras=("_commit_version",))
             part = rows.select(
                 *[F.col(f.name) for f in current.fields],
@@ -683,29 +705,28 @@ class LakeCatalog:
                 F.col("_commit_version"))
             parts.append(part)
             if kind == "merge":
-                rk = rows.select(*key_cols, "_commit_version").distinct()
-                rows_keys = rk if rows_keys is None \
-                    else rows_keys.unionByName(rk)
+                rows_keys.append(
+                    rows.select(*key_cols, "_commit_version").distinct())
         if marker_groups:
             # markers are read with each group's EXPLICIT key schema
             # (a key column widened mid-window would otherwise break
             # the schemaless multi-file scan), then cast to current
-            keys = None
+            marker_keys = []
             for sid, paths in sorted(marker_groups.items()):
                 mschema = StructType(
                     [f for f in _schema(t_to, sid).fields
                      if f.name in key_cols]
                     + [StructField("seq", LongType(), True)])
                 cur_types = {f.name: f.dataType for f in current.fields}
-                g = _with_version(
-                    self.spark.read.schema(mschema).parquet(*paths),
-                    marker_rows) \
+                marker_keys.append(
+                    _with_version(self.scan_files(mschema, paths),
+                                  marker_rows)
                     .select(*[F.col(k).cast(cur_types[k]).alias(k)
-                              for k in key_cols], "_commit_version")
-                keys = g if keys is None else keys.unionByName(g)
-            keys = keys.select(*key_cols, "_commit_version").distinct()
-            if rows_keys is not None:
-                keys = keys.join(rows_keys,
+                              for k in key_cols], "_commit_version"))
+            keys = _union_all(marker_keys).select(
+                *key_cols, "_commit_version").distinct()
+            if rows_keys:
+                keys = keys.join(_union_all(rows_keys),
                                  key_cols + ["_commit_version"],
                                  "left_anti")
             null_cols = [F.lit(None).cast(f.dataType).alias(f.name)
@@ -720,10 +741,7 @@ class LakeCatalog:
         if not parts:
             return self.spark.createDataFrame(
                 [], self._changes_schema(current))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union_all(parts)
 
     def window_op_kinds(self, name: str, from_version: int,
                         to_version: int | None = None) -> set[str]:

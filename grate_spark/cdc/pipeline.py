@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..extract import TABULAR_SUFFIX_RE
 from ..operators.extraction import extract_files, with_content_sha
-from .lake import LakeCatalog, _bucket_expr
+from .lake import LakeCatalog, _bucket_expr, _schema
 
 RESULTS_TABLE = "results"
 WIDE_TABLE = "results_wide"
@@ -457,7 +457,10 @@ class CdcPipeline:
                 wt = txn.tables.get(WIDE_TABLE)
                 same_spec = wt is None \
                     or int(wt["n_buckets"]) == self.n_buckets
-                written = self.spark.read.parquet(*stats["files"])
+                # the results schema this merge wrote them with: no
+                # footer-inference job, and no listing job (scan_files)
+                written = self.lake.scan_files(
+                    _schema(txn.tables[RESULTS_TABLE]), stats["files"])
                 txn.merge_replace_keys(WIDE_TABLE,
                                        _wide_view(written, max_cols,
                                                   self.wide_max_cols),

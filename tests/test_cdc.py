@@ -1351,6 +1351,30 @@ def test_ingest_reads_no_grate_env_switch():
     assert readers == [os.path.join("cdc", "bench.py")]
 
 
+def test_lake_reads_parquet_through_one_scan_helper():
+    """Every batch parquet read of the lake modules goes through
+    ``LakeCatalog.scan_files``, which builds the relation without a
+    Spark listing job, so a new read site cannot bring that job back:
+    the modules hold exactly one ``.read...parquet(`` (or ``.load(``)
+    call, inside that helper."""
+    import ast
+    import pathlib
+
+    cdc = pathlib.Path(__file__).resolve().parents[1] / "grate_spark" / "cdc"
+    sites = []
+    for module in ("lake.py", "pipeline.py", "sync.py"):
+        tree = ast.parse((cdc / module).read_text(encoding="utf-8"))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            sites += [(module, fn.name) for node in ast.walk(fn)
+                      if isinstance(node, ast.Call)
+                      and isinstance(node.func, ast.Attribute)
+                      and node.func.attr in ("parquet", "load")
+                      and ".read." in ast.unparse(node.func.value) + "."]
+    assert sites == [("lake.py", "scan_files")]
+
+
 def test_typed_column_rejects_unknown_target(spark):
     """ADVICE r4: an unrecognized Scan target must fail loudly, not
     degrade to an empty strict-tag list / silent string passthrough."""
@@ -2545,6 +2569,55 @@ def test_read_key_routes_without_spark_job(spark, tmp_path):
     got = plan.collect()
     assert [(r["repo"], r["path"], r["v"]) for r in got] == \
         [("r7", "p7", 7)]
+
+
+def test_manifest_reads_build_without_listing_job(spark, tmp_path):
+    """A read over more files than Spark's parallel-listing threshold
+    (32 paths by default) builds without any Spark job: the catalog
+    raises the threshold on its own session, so the manifest's paths
+    are re-checked serially on the driver instead of by a one-task-per-
+    file listing job. The same holds for both changelog plans, and
+    collecting the read runs no stage wider than its data files."""
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    root = str(tmp_path / "lake")
+    cat = LakeCatalog(spark, root)
+    key = ("repo", "path")
+    base = [(f"r{i % 3}", f"p{i}", i) for i in range(200)]
+    df = spark.createDataFrame(base, "repo string, path string, v long")
+    txn = cat.begin()
+    txn.merge_replace_keys("t", df, df.select(*key), key, n_buckets=64)
+    txn.commit()
+    # update keys 0-9 and delete keys 10-19: the read needs markers
+    upd = [(r, p, v + 1000) for r, p, v in base[:10]]
+    new = spark.createDataFrame(upd, "repo string, path string, v long")
+    keys = spark.createDataFrame([(r, p) for r, p, _ in base[:20]],
+                                 "repo string, path string")
+    txn = cat.begin()
+    txn.merge_replace_keys("t", new, keys, key, n_buckets=64)
+    txn.commit()
+    model = {(r, p): v for r, p, v in base[20:] + upd}
+
+    spark.conf.unset(threshold)
+    assert int(spark.conf.get(threshold)) == 32
+    cat = LakeCatalog(spark, root)
+    n_files = len(cat.scan_entries("t"))
+    assert n_files > 32
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    read = cat.read("t")
+    cat.changes("t", 0)               # per-op plan
+    cat.changes("t", 0, batch_min=0)  # batched plan
+    assert set(tracker.getJobIdsForGroup(None)) == before, \
+        "building a lake read ran a Spark job"
+
+    got = {(r["repo"], r["path"]): r["v"] for r in read.collect()}
+    assert got == model
+    tasks = [info.numTasks
+             for j in set(tracker.getJobIdsForGroup(None)) - before
+             for s in tracker.getJobInfo(j).stageIds
+             if (info := tracker.getStageInfo(s)) is not None]
+    assert tasks and max(tasks) <= n_files
 
 
 def test_read_key_int_keyed_table(spark, tmp_path):
