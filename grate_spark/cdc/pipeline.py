@@ -21,10 +21,14 @@ Per micro-batch (SURVEY §3.4 lifecycle; north rule semantics):
    sized by work: the bucket exchange packs the (bucket, sub-split)
    shares onto at most one task per core by event count, a hot bucket
    split by path hash (``_pack_tasks``); corrupt blobs become error
-   rows (counted in metrics, never task failures).
-6. **MERGE**: per-path replace into the bucketed results table +
-   schema-evolving wide view + metrics append + checkpoint/lineage — all
-   in ONE lake commit, so replaying after any crash is idempotent.
+   rows (counted in metrics, never task failures). The same Python task
+   encodes the rows to parquet with pyarrow
+   (``operators/fused_write.py``); only per-file manifest rows return.
+6. **MERGE**: the written files replace their paths in the bucketed
+   results table, the schema-evolving wide view merges over them, and
+   checkpoint + lineage ride along — all in ONE lake commit, so
+   replaying after any crash is idempotent. The batch's metrics row is
+   buffered once that commit returns and written by ``flush_metrics``.
 
 The results table key is (repo, path); each row also carries
 (sheet, row_id) per the north star key, plus lineage columns
@@ -43,7 +47,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..extract import TABULAR_SUFFIX_RE
-from ..operators.extraction import extract_files, with_content_sha
+from ..operators.extraction import unwrap_content
+from ..operators.fused_write import ROW_SCHEMA, extract_encode_files
 from .lake import LakeCatalog, _bucket_expr, _schema
 
 RESULTS_TABLE = "results"
@@ -109,13 +114,15 @@ def _wide_view(rows: DataFrame, n_cols: int,
 
 
 class CdcPipeline:
+    # always True: kept only because perfbench/run.py still reads it
+    python_encode = True
+
     def __init__(self, spark: SparkSession, lake_root: str,
                  n_buckets: int = 32,
                  wide_view: bool = True,
                  broadcast_winners_max: int = 1_000_000,
                  salt_buckets: bool = True,
-                 wide_max_cols: int = 256,
-                 python_encode: bool | None = None):
+                 wide_max_cols: int = 256):
         self.spark = spark
         self.lake = LakeCatalog(spark, lake_root)
         self.n_buckets = n_buckets
@@ -126,35 +133,6 @@ class CdcPipeline:
         # count exceeds a task's quota over several tasks by path hash
         # (see _pack_tasks). Off -> a bucket never spans two tasks.
         self.salt_buckets = salt_buckets
-        # python_encode: run the merge write as the arrow-native fused
-        # writer — extraction AND parquet encode inside the Python
-        # worker (pyarrow), only per-file manifest rows returning to the
-        # driver. Trade-off, measured interleaved on the same event log:
-        # at LOW per-executor parallelism it removes the JVM half (Arrow
-        # row transfer back + parquet-mr) whose task time inflated
-        # super-linearly with thread count, and the identical Python
-        # loop scales at the host's CPU ceiling
-        # (scripts/twin_scaling.py, BENCH_TWIN_2_8.json); at local[32]
-        # (one oversubscribed JVM) the object->Arrow conversion makes
-        # it ~1.6x SLOWER than parquet-mr (431 vs 710 ev/s warm). Real
-        # clusters run 4-8 cores/executor where the fused path is the
-        # right shape, but the default follows the measured single-JVM
-        # throughput. Default (None) is ADAPTIVE on the session's
-        # parallelism (like AQE picking a join strategy): fused at <= 8
-        # task threads per JVM (measured best 30.7s vs 53.6s at local[8]
-        # on the xlsx workload), parquet-mr above (710 vs 431 ev/s at
-        # local[32]); both paths are state-identical (gate-tested).
-        # See operators/fused_write.py.
-        if python_encode is None:
-            # the measured crossover (fused wins at <= 8 task threads,
-            # parquet-mr above) is PER-JVM oversubscription, so gate on
-            # per-executor task slots: on a cluster defaultParallelism
-            # is TOTAL cores (8 execs x 4 cores = 32) and would wrongly
-            # pick parquet-mr for exactly the 4-8-core executors where
-            # fused is the right shape. local masters have one JVM =
-            # defaultParallelism slots.
-            python_encode = self._task_slots_per_jvm(spark) <= 8
-        self.python_encode = python_encode
         # batches up to this many events dedup via a broadcast semi-join
         # of the winning (repo, path, offset) keys, so blob payloads are
         # NEVER shuffled; bigger batches fall back to the full-row
@@ -162,27 +140,6 @@ class CdcPipeline:
         self.broadcast_winners_max = broadcast_winners_max
         self._pending_metrics: list[tuple] = []
         self._sync_bucket_spec()
-
-    @staticmethod
-    def _task_slots_per_jvm(spark: SparkSession) -> int:
-        """Concurrent task slots per executor JVM — the contention
-        domain the fused-writer crossover was measured against.
-        ``spark.executor.cores / spark.task.cpus`` on a cluster;
-        defaultParallelism only for local[...] masters (one JVM)."""
-        master = spark.sparkContext.master or ""
-        if master.startswith("local"):
-            return int(spark.sparkContext.defaultParallelism)
-        try:
-            exec_cores = int(spark.conf.get("spark.executor.cores", "0")
-                             or 0)
-            task_cpus = int(spark.conf.get("spark.task.cpus", "1") or 1)
-        except Exception:
-            exec_cores, task_cpus = 0, 1
-        if exec_cores > 0:
-            return max(1, exec_cores // max(1, task_cpus))
-        # executor.cores unset (e.g. standalone grabbing whole nodes):
-        # fall back to total parallelism — conservative (parquet-mr)
-        return int(spark.sparkContext.defaultParallelism)
 
     def _sync_bucket_spec(self, manifest: dict | None = None) -> None:
         """The manifest's bucket spec is authoritative for an existing
@@ -238,7 +195,7 @@ class CdcPipeline:
         shuffle (~20% faster than exchanging the extracted rows at
         local[8], interleaved A/B on a 15k-file xlsx batch). A task
         holds several buckets and a split bucket spans several tasks;
-        both writers write one file per (task, bucket), so every file
+        the writer writes one file per (task, bucket), so every file
         stays bucket-pure and a split bucket lands as one file per
         sub-split."""
         return blobs.repartitionById(
@@ -356,96 +313,51 @@ class CdcPipeline:
                     .drop("_rn"))
                 blobs = latest.select("repo", "path", "commit", "lang",
                                       "content", "offset")
-            if self.python_encode:
-                # arrow-native fused writer: attach lineage + the
-                # JVM-computed bucket BEFORE the exchange, and unwrap
-                # base64 on the map side so the shuffle carries raw
-                # bytes (~25% fewer for binary blobs)
-                from ..operators.extraction import unwrap_content
-                blobs = unwrap_content(
-                    blobs.withColumn("src_offset", F.col("offset")),
-                    keep=("src_offset",)).withColumn(
-                    "_bucket", _bucket_expr(MERGE_KEY, self.n_buckets))
+            # attach lineage + the JVM-computed bucket BEFORE the
+            # exchange, and unwrap base64 on the map side so the
+            # shuffle carries raw bytes (~25% fewer for binary blobs)
+            blobs = unwrap_content(
+                blobs.withColumn("src_offset", F.col("offset")),
+                keep=("src_offset",)).withColumn(
+                "_bucket", _bucket_expr(MERGE_KEY, self.n_buckets))
             plan, loads = self._pack_tasks(bucket_counts, n_events)
             blobs = self._bucket_exchange(blobs, plan)
             txn = self.lake.begin()
             all_keys = winners.select("repo", "path")
-            if self.python_encode:
-                # ONE heavy job, arrow-native: each task extracts its
-                # blobs AND encodes parquet with pyarrow inside the
-                # Python worker; only per-file manifest rows (plus the
-                # row stats, free on the same pass) come back. Row
-                # data never re-crosses into the JVM and parquet-mr is
-                # out of the hot path (operators/fused_write.py).
-                from ..operators.fused_write import (ROW_SCHEMA,
-                                                     extract_encode_files)
-                rel = txn.stage_rel(RESULTS_TABLE)
-                full = os.path.join(self.lake.root, rel)
-                manifest = extract_encode_files(
-                    blobs, full, rel, txn.next_seq(),
-                    batch_id).collect()
-                entries_by_bucket: dict[str, list[dict]] = {}
-                for r in manifest:
-                    entries_by_bucket.setdefault(
-                        str(r["bucket"]), []).append(
-                        {"path": r["path"],
-                         "bounds": {"repo": [r["repo_min"],
-                                             r["repo_max"]],
-                                    "path": [r["path_min"],
-                                             r["path_max"]]}})
-                stats = txn.merge_files(RESULTS_TABLE, ROW_SCHEMA,
-                                        entries_by_bucket, all_keys,
-                                        MERGE_KEY, self.n_buckets,
-                                        touched=touched,
-                                        approx_keys=n_events)
-                n_rows = int(sum(r["n_rows"] for r in manifest))
-                n_error_rows = int(sum(r["n_error_rows"]
-                                       for r in manifest))
-                max_cols = int(max((r["max_cols"] for r in manifest),
-                                   default=0))
-            else:
-                rows = with_content_sha(extract_files(blobs))
+            # ONE heavy job, arrow-native: each task extracts its blobs
+            # AND encodes parquet with pyarrow inside the Python worker;
+            # only per-file manifest rows (plus the row stats, free on
+            # the same pass) come back. Row data never re-crosses into
+            # the JVM (operators/fused_write.py).
+            rel = txn.stage_rel(RESULTS_TABLE)
+            full = os.path.join(self.lake.root, rel)
+            manifest = extract_encode_files(
+                blobs, full, rel, txn.next_seq(), batch_id).collect()
+            entries_by_bucket: dict[str, list[dict]] = {}
+            for r in manifest:
+                entries_by_bucket.setdefault(str(r["bucket"]), []).append(
+                    {"path": r["path"],
+                     "bounds": {"repo": [r["repo_min"], r["repo_max"]],
+                                "path": [r["path_min"], r["path_max"]]}})
+            stats = txn.merge_files(RESULTS_TABLE, ROW_SCHEMA,
+                                    entries_by_bucket, all_keys,
+                                    MERGE_KEY, self.n_buckets,
+                                    touched=touched,
+                                    approx_keys=n_events)
+            n_rows = int(sum(r["n_rows"] for r in manifest))
+            n_error_rows = int(sum(r["n_error_rows"] for r in manifest))
+            max_cols = int(max((r["max_cols"] for r in manifest),
+                               default=0))
 
-                # lineage columns come from the driving event
-                ev_meta = win_iu.select(
-                    "repo", "path", F.col("offset").alias("src_offset"))
-                rows = rows.join(F.broadcast(ev_meta),
-                                 ["repo", "path"]) \
-                    .withColumn("batch_id", F.lit(batch_id))
-
-                # row stats ride the merge write itself via an
-                # Observation — zero extra jobs, no re-read of the
-                # written files (at scale a re-read is a second pass
-                # over the batch's output)
-                from pyspark.sql import Observation
-                obs = Observation(f"cdc-batch-{batch_id}")
-                rows = rows.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.count("error").alias("n_error_rows"),
-                    F.max(F.size("cells")).alias("max_cols"))
-
-                # ONE heavy job: extraction fused straight into the MoR
-                # merge write (blob bucket exchange -> extract -> write)
-                stats = txn.merge_replace_keys(
-                    RESULTS_TABLE, rows, all_keys, MERGE_KEY,
-                    self.n_buckets, touched=touched,
-                    pre_partitioned=True,
-                    approx_keys=n_events)
-
-                # the merge's write action completed, so the observed
-                # metrics are available without touching the data again
-                vals = obs.get
-                n_rows = int(vals["n_rows"] or 0)
-                n_error_rows = int(vals["n_error_rows"] or 0)
-                max_cols = int(vals["max_cols"] or 0)
-
-            if self.wide_view and stats["files"]:
+            # a delete-only batch writes no results file, yet its keys
+            # still leave the wide view
+            if self.wide_view and (stats["files"]
+                                   or WIDE_TABLE in txn.tables):
                 # the wide merge needs the typed-width projection, whose
                 # width (max_cols) we only know post-write; read the
                 # files the merge just wrote (column-pruned) as input.
-                # Those files are already bucket-pure (partitionBy wrote
-                # one bucket per file), and the projection never moves a
+                # Those files are already bucket-pure (one file per
+                # (task, bucket)), and the projection never moves a
                 # row across keys — so the wide write is pre_partitioned
                 # too: the whole wide path runs without ANY exchange
                 # (scan -> project -> encode in one fused stage).
@@ -471,14 +383,6 @@ class CdcPipeline:
                                        pre_partitioned=same_spec,
                                        approx_keys=n_events)
 
-            # per-batch ingest metrics buffer — flushed to the metrics
-            # table in one write by flush_metrics() (replay calls it);
-            # the lineage entry below carries the same facts durably in
-            # the SAME commit as the data, so a crash loses no metrics
-            self._pending_metrics.append(
-                (batch_id, lo, hi, n_events, n_rows, n_error_rows,
-                 len(stats["buckets"])))
-
             txn.set_checkpoint(
                 {"global": hi},
                 {"batch_id": batch_id, "lo": lo, "hi": hi,
@@ -487,6 +391,14 @@ class CdcPipeline:
                  "buckets": stats["buckets"],
                  "tasks": len(loads), "max_task_events": max(loads)})
             txn.commit()
+            # per-batch ingest metrics buffer, flushed to the metrics
+            # table in one write by flush_metrics(); buffered only once
+            # the batch committed, so a failed commit that is retried
+            # leaves one row. The lineage entry carries the same facts
+            # durably in the SAME commit as the data.
+            self._pending_metrics.append(
+                (batch_id, lo, hi, n_events, n_rows, n_error_rows,
+                 len(stats["buckets"])))
             return {"batch_id": batch_id, "n_events": n_events,
                     "n_rows": n_rows, "n_error_rows": n_error_rows,
                     "committed": True, "lo": lo, "hi": hi}
@@ -704,6 +616,7 @@ class CdcPipeline:
              .trigger(availableNow=True)
              .start())
         q.awaitTermination()
+        self.flush_metrics()
 
     # -- reads ------------------------------------------------------------------
 

@@ -1,17 +1,11 @@
-"""Fused extract->parquet-encode inside the Python worker.
+"""Fused extract->parquet-encode inside the Python worker: the CDC
+pipeline's one results-table writer.
 
-The default merge path used to ship every extracted row back across
-Arrow into the JVM and encode it with parquet-mr
-(``extract_files`` -> lineage join -> ``DataFrame.write``). Stage-level
-profiling showed that JVM half inflating super-linearly with local
-parallelism, while a Spark-free twin of the same per-task loop
-(extract -> pyarrow encode, scripts/twin_scaling.py) scales at the
-box's pure-CPU ceiling. So the hot path now runs the twin's loop AS
-the Spark task: blobs arrive at the worker (one Arrow hop, which is
-irreducible — the shuffle is JVM-side), each task extracts its blobs
-and encodes parquet files directly with pyarrow (C++), and only tiny
-per-file manifest rows return to the driver. Extracted row data never
-crosses back into the JVM and parquet-mr leaves the hot path.
+Blobs arrive at the worker (one Arrow hop, which is irreducible — the
+shuffle is JVM-side), each task extracts its blobs and encodes parquet
+files directly with pyarrow (C++), and only tiny per-file manifest
+rows return to the driver. Extracted row data never crosses back into
+the JVM, so no row pays a second Arrow hop or a parquet-mr encode.
 
 Correctness/atomicity: tasks write into the transaction's staging
 directory, but files become visible ONLY when the driver registers the
@@ -23,7 +17,8 @@ data files by manifest rather than by directory listing.
 Input contract: the blob DataFrame must already carry
 ``_bucket`` (computed JVM-side with the lake's xxhash64 bucket
 expression — NOT re-derived in Python, so bucketing stays
-bit-identical to the JVM path) and ``src_offset`` lineage columns.
+bit-identical to the lake's readers) and ``src_offset`` lineage
+columns.
 A task may hold any mix of buckets: the CDC pipeline packs several
 buckets onto one task, and splits a hot bucket over several, by
 event count. Each task writes one file per bucket it sees, so every
@@ -53,9 +48,8 @@ FILE_COLS = ([f.name for f in EXTRACT_SCHEMA.fields]
              + ["content_sha256", "src_offset", "batch_id", "_seq"])
 
 # the row schema the lake stores for these files (everything but _seq,
-# which the lake appends at read time) — field order matches the JVM
-# path (extract_files -> with_content_sha -> lineage join -> batch_id)
-# so either writer yields the same registered schema
+# which the lake appends at read time) — field order matches
+# extract_files -> with_content_sha -> src_offset -> batch_id
 ROW_SCHEMA = StructType(
     list(EXTRACT_SCHEMA.fields)
     + [StructField("content_sha256", StringType()),

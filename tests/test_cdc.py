@@ -334,27 +334,49 @@ def test_lake_changes_pipeline_end_to_end(spark, tmp_path):
 
 
 def test_python_encode_state_matches_jvm_writer(spark, tmp_path):
-    """The arrow-native fused writer (extract+pyarrow-encode in the
-    Python worker, manifest-registered files) and the JVM writer
-    (Arrow row transfer + parquet-mr via DataFrame.write) must produce
-    IDENTICAL visible state — content columns, lineage columns, wide
-    view, and error rows alike — across a multi-batch I/U/D replay."""
+    """The results writer (extract+pyarrow-encode in the Python worker,
+    manifest-registered files) lands, across a multi-batch I/U/D
+    replay, the rows that direct JVM-side extraction of each key's
+    winning event yields: content columns, error rows and the
+    worker-side ``row_sha256`` against JVM ``sha2`` on real data; the
+    lineage columns of the winning offset and the batch that holds it;
+    and the wide view's first cells."""
+    from pyspark.sql import Window
+
+    from grate_spark.operators.extraction import (extract_files,
+                                                  with_content_sha)
+
     events = synthetic_doc_events(spark, SF)
     n = events.count()
-    fps = {}
-    for mode, enc in (("fused", True), ("jvm", False)):
-        pipe = CdcPipeline(spark, str(tmp_path / mode), n_buckets=8,
-                           wide_view=True, python_encode=enc)
-        assert pipe.python_encode is enc
-        pipe.replay(events, batch_size=max(1, n // 3))
-        cols = CONTENT_COLS + ["fmt", "sheet_idx", "types", "formats",
-                               "src_offset", "batch_id"]
-        fps[mode] = (state_fingerprint(pipe.results(), cols),
-                     state_fingerprint(pipe.results_wide(),
-                                       ["repo", "path", "row_id",
-                                        "c001", "c002", "c003"]),
-                     pipe.results().count())
-    assert fps["fused"] == fps["jvm"]
+    step = max(1, n // 3)
+    pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=8,
+                       wide_view=True)
+    pipe.replay(events, batch_size=step)
+
+    # batch i covers offsets ((i-1)*step, i*step], the checkpoint
+    # starting at 0
+    w = Window.partitionBy("repo", "path").orderBy(F.desc("offset"))
+    final = (events.withColumn("_rn", F.row_number().over(w))
+             .filter((F.col("_rn") == 1) & (F.col("op") != "D")))
+    lineage = final.select(
+        "repo", "path", F.col("offset").alias("src_offset"),
+        (F.floor((F.col("offset") - 1) / step) + 1).cast("int")
+        .alias("batch_id"))
+    want = with_content_sha(extract_files(final)).join(
+        lineage, ["repo", "path"])
+    cols = CONTENT_COLS + ["fmt", "sheet_idx", "types", "formats",
+                           "src_offset", "batch_id"]
+    assert state_fingerprint(pipe.results(), cols) \
+        == state_fingerprint(want, cols)
+    assert pipe.results().count() == want.count() > 0
+
+    wide_cols = ["repo", "path", "row_id", "c001", "c002", "c003"]
+    want_wide = want.filter(F.col("error").isNull()).select(
+        "repo", "path", "row_id",
+        *[F.try_element_at("cells", F.lit(i)).alias(f"c{i:03d}")
+          for i in (1, 2, 3)])
+    assert state_fingerprint(pipe.results_wide(), wide_cols) \
+        == state_fingerprint(want_wide, wide_cols)
 
 
 def test_lake_compaction_preserves_state(spark, tmp_path):
@@ -797,6 +819,40 @@ def test_crash_before_commit_is_invisible(spark, tmp_path):
         state_fingerprint(ref.results())
 
 
+def test_failed_commit_retry_leaves_one_metrics_row(spark, tmp_path,
+                                                    monkeypatch):
+    """A batch whose lake commit raises buffers no metrics row: replaying
+    again through the same pipeline writes exactly one row per
+    committed batch."""
+    from grate_spark.cdc.events import EVENT_COLS
+    from grate_spark.cdc.lake import Transaction
+
+    events = spark.createDataFrame(
+        [(i + 1, 0, "I", "r", f"f{i}.csv", f"c{i}", "csv", f"a,b\n{i},x")
+         for i in range(4)], list(EVENT_COLS))
+    pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=4,
+                       wide_view=False)
+    real_commit = Transaction.commit
+    calls = []
+
+    def commit_fails_once(self, *a, **kw):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected commit failure")
+        return real_commit(self, *a, **kw)
+
+    monkeypatch.setattr(Transaction, "commit", commit_fails_once)
+    with pytest.raises(RuntimeError, match="injected"):
+        pipe.replay(events, batch_size=2)
+    assert pipe.lake.lineage() == []
+    pipe.replay(events, batch_size=2)
+    committed = [e["batch_id"] for e in pipe.lake.lineage()
+                 if "n_rows" in e]
+    assert committed == [1, 2]
+    assert sorted(r["batch_id"] for r in pipe.metrics().collect()) \
+        == committed
+
+
 def test_lineage_and_metrics(fixture_replayed):
     pipe, events, stats = fixture_replayed
     lin = pipe.lake.lineage()
@@ -865,6 +921,9 @@ def test_streaming_foreachbatch_matches_batch_replay(spark, tmp_path):
     pipe_b.replay(events)
     assert state_fingerprint(pipe_s.results()) == \
         state_fingerprint(pipe_b.results())
+    # the streaming ingest writes one metrics row per committed batch
+    assert sorted(r["batch_id"] for r in pipe_s.metrics().collect()) \
+        == [e["batch_id"] for e in pipe_s.lake.lineage() if "n_rows" in e]
 
 
 # --------------------------------------------------------------------------
@@ -1154,9 +1213,7 @@ def test_pack_tasks_give_each_sub_split_its_own_task(spark):
             == [(plan[bk][0], 5)]
 
 
-@pytest.mark.parametrize("python_encode", [True, False])
-def test_packed_tasks_write_bucket_pure_files(spark, tmp_path,
-                                              python_encode):
+def test_packed_tasks_write_bucket_pure_files(spark, tmp_path):
     """A batch that touches more buckets than there are cores, one of
     them hot: packing puts several buckets on one task and splits the
     hot one over several. Every registered data file of results and
@@ -1188,8 +1245,7 @@ def test_packed_tasks_write_bucket_pure_files(spark, tmp_path,
         [(i + 1, i % 3, "I", repo, path, f"c{i}", "csv",
           f"a,b\n{i},{repo}\n{i + 1},{path}")
          for i, (repo, path) in enumerate(keys)], list(EVENT_COLS))
-    pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=nb,
-                       python_encode=python_encode)
+    pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=nb)
     pipe.replay(events)
     lin = pipe.lake.lineage()[-1]
     assert lin["tasks"] <= par < len(lin["buckets"]) == nb
@@ -1223,8 +1279,8 @@ def test_packed_tasks_write_bucket_pure_files(spark, tmp_path,
 
 
 def test_fixture_replay_matches_direct_extraction(spark, tmp_path):
-    """Replaying the fixture log with either writer lands exactly the
-    rows that direct extraction of the log's final blobs yields (the
+    """Replaying the fixture log lands exactly the rows that direct
+    extraction of the log's final blobs yields (the
     latest event per path, deletes and non-tabular paths dropped)."""
     from pyspark.sql import Window
 
@@ -1240,11 +1296,10 @@ def test_fixture_replay_matches_direct_extraction(spark, tmp_path):
     cols = ["repo", "path", "sheet", "row_id", "cells", "content_sha256",
             "error"]
     want = state_fingerprint(with_content_sha(extract_files(final)), cols)
-    for enc in (True, False):
-        pipe = CdcPipeline(spark, str(tmp_path / f"enc{enc}"), n_buckets=8,
-                           wide_view=False, python_encode=enc)
-        pipe.replay(events, batch_size=4)
-        assert state_fingerprint(pipe.results(), cols) == want, enc
+    pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=8,
+                       wide_view=False)
+    pipe.replay(events, batch_size=4)
+    assert state_fingerprint(pipe.results(), cols) == want
 
 
 def test_replay_non_tabular_only_range_advances_checkpoint(spark, tmp_path):
@@ -1274,19 +1329,17 @@ def test_replay_non_tabular_only_range_advances_checkpoint(spark, tmp_path):
     assert pipe.results().filter(F.col("path") == "data.csv").count() == 2
 
 
-@pytest.mark.parametrize("python_encode", [True, False])
-def test_replay_releases_winners_cache(spark, tmp_path, python_encode):
+def test_replay_releases_winners_cache(spark, tmp_path):
     """Every batch's cached rows and winner set, prefetched or not, are
-    released by the end of a multi-batch replay, with either writer: a
-    long-lived session tailing a log must not accumulate CacheManager
-    entries."""
+    released by the end of a multi-batch replay: a long-lived session
+    tailing a log must not accumulate CacheManager entries."""
     def cache_mgr_empty():
         return bool(spark._jsparkSession.sharedState()
                     .cacheManager().isEmpty())
 
     spark.catalog.clearCache()  # deterministic baseline under -p ordering
     pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=4,
-                       wide_view=False, python_encode=python_encode)
+                       wide_view=False)
     stats = pipe.replay(fixture_events(spark, fixture_blobs()),
                         batch_size=3)
     assert len(stats) >= 3
@@ -1576,7 +1629,7 @@ def test_fused_writer_bounds_and_read_key(spark, tmp_path):
               f"k,v\n{i},z") for i in range(3)]
     events = spark.createDataFrame(rows, list(EVENT_COLS))
     pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=4,
-                       wide_view=False, python_encode=True)
+                       wide_view=False)
     # two batches -> repoA files and repoZ files land in separate
     # commits, so per-file repo bounds are tight
     pipe.replay(events, batch_size=3)

@@ -140,25 +140,33 @@ def test_dedup_reuses_signature_exchange(spark):
 def test_bucket_blobs_fuses_extract_into_write(spark, tmp_path):
     """The replay's exchange plan: the ONLY exchange is the pipeline's
     own blob exchange (``CdcPipeline._bucket_exchange``: blobs placed
-    on their bucket's task slot by partition id), below the extraction
-    UDF — extracted rows flow to the writer with no second shuffle
-    (the barrier-free extract->encode fuse). A hot bucket is in the
-    batch so that the salted sub-split is part of the plan."""
+    on their bucket's task slot by partition id), below the fused
+    extract+encode UDF, built as ``apply_batch`` builds it — nothing
+    is shuffled between extraction and the parquet encode. A hot
+    bucket is in the batch so that the salted sub-split is part of
+    the plan."""
+    from pyspark.sql import functions as F
+
     from grate_spark.cdc.events import doc_csv_blobs
     from grate_spark.cdc.lake import _bucket_expr
-    from grate_spark.cdc.pipeline import CdcPipeline
-    from grate_spark.operators.extraction import extract_files
+    from grate_spark.cdc.pipeline import MERGE_KEY, CdcPipeline
+    from grate_spark.operators.extraction import unwrap_content
+    from grate_spark.operators.fused_write import extract_encode_files
 
     pipe = CdcPipeline(spark, str(tmp_path / "lake"), n_buckets=8,
-                       wide_view=False, python_encode=False)
+                       wide_view=False)
     counts = {0: 895, **{b: 15 for b in range(1, 8)}}
     plan, _ = pipe._pack_tasks(counts, 1000)
     assert len(plan[0]) > 1
-    blobs = pipe._bucket_exchange(doc_csv_blobs(spark, SF, version=1),
-                                  plan)
-    rows = extract_files(blobs).withColumn(
-        "_bucket", _bucket_expr(("repo", "path"), 8))
-    plan = simple_plan(rows)
+    blobs = unwrap_content(
+        doc_csv_blobs(spark, SF, version=1)
+        .withColumn("src_offset", F.lit(1).cast("bigint")),
+        keep=("src_offset",)).withColumn(
+        "_bucket", _bucket_expr(MERGE_KEY, 8))
+    out = tmp_path / "stage"
+    files = extract_encode_files(pipe._bucket_exchange(blobs, plan),
+                                 str(out), "stage", 1, 1)
+    plan = simple_plan(files)
     above_udf = plan[:plan.index("MapInPandas")]
     assert "Exchange" not in above_udf, \
         "exchange sits above the extraction UDF (rows reshuffled):\n" + plan
